@@ -212,13 +212,14 @@ object Bench {
     // its own run's invocations, not replay this one's.
     val pickBands = graft.operators.Dedup.drainPickBandsMs()
     val pickProbes = graft.operators.EmbedOps.drainPickProbesMs()
-    val json = renderJson(outcome, sfDir, passes, loadBefore, loadAvg(), diag,
+    val loadAfter = loadAvg()
+    val json = renderJson(outcome, sfDir, passes, loadBefore, loadAfter, diag,
       Map("pickbands_ms" -> pickBands, "pickprobes_ms" -> pickProbes))
     println(json)
     // The LAST stdout line is the compact summary (no per-query map): a
     // consumer whose capture window is smaller than the ~9 KB full line
     // still reads a complete record — see renderSummaryJson.
-    println(renderSummaryJson(outcome, sfDir, passes, loadBefore, loadAvg()))
+    println(renderSummaryJson(outcome, sfDir, passes, loadBefore, loadAfter))
     // Self-contained record regardless of the caller's capture window, plus
     // an append-only history so per-round records survive the next run.
     try {

@@ -3683,7 +3683,11 @@ object Queries {
       val allCols = (addCols :+ "n_unique_docs_est").map(col)
       val mRows = merged.select(allCols: _*).collect()
       val fRows = full.select(allCols: _*).collect()
-      require(mRows.map(_.toSeq.take(5)).toSet == fRows.map(_.toSeq.take(5)).toSet,
+      // -0.0 → 0.0 before the boxed-Double set equality, as SQL's float
+      // normalization does (java.lang.Double.equals tells the zeros apart).
+      def additive(r: org.apache.spark.sql.Row) =
+        r.toSeq.take(5).map { case d: Double => d + 0.0; case v => v }
+      require(mRows.map(additive).toSet == fRows.map(additive).toSet,
         "merged profile diverged from the full-scan profile")
       val est = mRows.map(r => r.getString(0) -> r.getLong(5)).toMap
       fRows.foreach { r =>

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -15,8 +15,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * on local disk, HDFS, or an object store — the adoption strategy is chosen
   * by the root's FS scheme, see [[renameCapable]]):
   *
-  *   1. The batch gets a content-derived TOKEN (row count + order-independent
-  *      id hash), so a replay of the same batch is recognizable.
+  *   1. PREFLIGHT: one aggregate over the raw caller batch ([[preflight]])
+  *      yields its row count, its content-derived TOKEN (row count +
+  *      order-independent id hash, so a replay of the same batch is
+  *      recognizable) and how many of its ids clash with an id set the
+  *      family forbids (tombstones, or ids already indexed).
   *   2. `append_mark.json` records `{token, phase, payload}`; `payload`
   *      carries the PRE-append sidecar state (e.g. BM25's n/Σdl), so a
   *      recovery never re-reads a sidecar the crashed attempt may already
@@ -35,8 +38,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *        atomic commit point (single-object PUT). Recovery deletes the
   *        batch dir and redoes it. Readers resolve live + committed batch
   *        dirs via [[dataPaths]]/[[readData]].
-  *   4. `done` mark last. Crash anywhere → re-running the SAME batch
-  *      converges to the clean result; a DIFFERENT batch (or a reader) over
+  *   4. `done` mark last. The REPLAY RULE, one for every family: an empty
+  *      batch is a no-op and writes no mark; a batch whose token the `done`
+  *      mark names is a no-op (its ids clash by now: it indexed them, and
+  *      some may since have been deleted); a batch whose token the
+  *      dangling `begin` names resumes, converging to the clean result
+  *      after a crash anywhere (the index may hold a partial prefix of it,
+  *      so clashes are expected); only a FRESH batch is refused on a
+  *      clash, before its begin mark. A DIFFERENT batch (or a reader) over
   *      a dangling `begin` refuses loudly with recovery instructions.
   *
   * Concurrency: the mark also serializes writers — a second concurrent
@@ -107,21 +116,38 @@ object BatchCommit {
     paths.map(spark.read.parquet(_)).reduce(_.unionByName(_))
   }
 
-  /** Filesystem-safe token from a batch's row count and id-hash sum. */
-  def tokenOf(count: Long, idHash: Long): String =
-    java.lang.Long.toHexString(idHash) + "n" + count
-
-  /** Content-derived batch token in ONE narrow aggregate over the batch:
-    * (row count, XOR of xxhash64(id)) — order- and partitioning-independent
-    * and overflow-free under ANSI mode, so the same batch yields the same
-    * token on every replay attempt. The hash must be over the RAW caller
-    * batch (not an index-dependent filter of it), or recovery replays would
-    * mis-token.
+  /** One append's preflight: the batch's row count, its content token,
+    * how many of its rows carry an id of the clash set, and the caller's
+    * extra aggregates (in the order given).
     */
-  def batchToken(df: DataFrame, idCol: String): String = {
-    val r = df.select(xxhash64(col(idCol).cast("string")).as("__h"))
-      .agg(count(lit(1)), expr("bit_xor(__h)")).head()
-    tokenOf(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  final case class Preflight(rows: Long, token: String, clashes: Long, extra: Row)
+
+  /** The append preflight in ONE aggregate over the RAW caller batch (not an
+    * index-dependent filter of it, or recovery replays would mis-token):
+    * the filesystem-safe token `<hex XOR of xxhash64(id)>n<row count>` —
+    * order- and partitioning-independent and overflow-free under ANSI mode,
+    * so the same batch yields the same token on every replay attempt — plus the number of rows whose id is in
+    * `clashIds` (a one-column id set, compared in its type). The left join
+    * against the DISTINCT set keeps exactly one row per batch row, so the
+    * count, the token and `extra` (aggregates over `batch`'s columns) are
+    * those of the batch itself.
+    */
+  def preflight(batch: DataFrame, idCol: String, clashIds: Option[DataFrame],
+      extra: Column*): Preflight = {
+    val hashed = batch.withColumn("__h", xxhash64(col(idCol).cast("string")))
+    val (joined, clashes) = clashIds match {
+      case Some(ids) =>
+        val f = ids.schema.head
+        (hashed.join(ids.select(col(f.name).as("__cid")).distinct(),
+          col(idCol).cast(f.dataType) === col("__cid"), "left"),
+          count(col("__cid")))
+      case None => (hashed, lit(0L))
+    }
+    val r = joined.agg(count(lit(1)), expr("bit_xor(__h)") +: clashes +: extra: _*)
+      .head()
+    val idHash = if (r.isNullAt(1)) 0L else r.getLong(1)
+    Preflight(r.getLong(0), java.lang.Long.toHexString(idHash) + "n" + r.getLong(0),
+      r.getLong(2), Row.fromSeq(r.toSeq.drop(3)))
   }
 
   // ------------------------------------------------------------------
@@ -141,10 +167,10 @@ object BatchCommit {
     */
   def writeTombstones(df: DataFrame, idCol: String, root: String): Long = {
     val ids = df.select(col(idCol)).distinct()
-    val token = batchToken(ids, idCol)
+    val pre = preflight(ids, idCol, None)
     ids.coalesce(1).write.mode("overwrite")
-      .parquet(s"${tombstonesPath(root)}/batch_$token")
-    ids.count()
+      .parquet(s"${tombstonesPath(root)}/batch_${pre.token}")
+    pre.rows
   }
 
   /** All tombstoned ids under `root` (one column, the original idCol
@@ -166,21 +192,12 @@ object BatchCommit {
       case None => data
     }
 
-  /** Append preflight: refuse a batch holding tombstoned ids — the
+  /** The refusal of a fresh append holding tombstoned ids — the
     * reader-side anti-join would silently swallow the new rows.
     */
-  def requireNotTombstoned(df: DataFrame, idCol: String, root: String,
-      what: String): Unit =
-    readTombstones(df.sparkSession, root).foreach { t =>
-      val idName = t.schema.fieldNames.head
-      require(idName == idCol,
-        s"$what: tombstone id column '$idName' != batch id column '$idCol'")
-      val clash = df.select(col(idCol))
-        .join(t.select(idName).distinct(), Seq(idCol), "left_semi").limit(1)
-      require(clash.isEmpty,
-        s"$what: batch contains tombstoned ids — compact the index at $root " +
-          "first (a tombstone shadows its id)")
-    }
+  def tombstonedRefusal(what: String, root: String): String =
+    s"$what: batch contains tombstoned ids — compact the index at $root " +
+      "first (a tombstone shadows its id)"
 
   def readMark(spark: SparkSession, root: String): Option[Mark] = {
     val p = new Path(root, markFile)
@@ -306,18 +323,6 @@ object BatchCommit {
     }
   }
 
-  /** Run one exactly-once append. Returns false when the mark shows this
-    * exact batch already committed (idempotent replay — nothing to do).
-    *
-    *   - `sidecarState`: pre-append sidecar values to pin in the begin mark
-    *     (evaluated only on a FRESH attempt; recovery reuses the mark's).
-    *   - `writeStaged(dir)`: write the batch's data files under `dir` with
-    *     mode("overwrite"). Any index reads inside it (e.g. an id anti-join)
-    *     must build their plan INSIDE the closure — it runs after recovery
-    *     cleanup, so it sees the index without the partial batch.
-    *   - `updateSidecar(payload)`: atomically move the sidecar to
-    *     payload + this batch, AFTER the data adoption.
-    */
   val leaseFile = "_writer.lock"
 
   /** Exclusive writer lease over an index root — the guard against TWO
@@ -521,6 +526,18 @@ object BatchCommit {
     }
   }
 
+  /** Run one exactly-once append. Returns false when the mark shows this
+    * exact batch already committed (idempotent replay — nothing to do).
+    *
+    *   - `sidecarState`: pre-append sidecar values to pin in the begin mark
+    *     (evaluated only on a FRESH attempt; recovery reuses the mark's).
+    *   - `writeStaged(dir)`: write the batch's data files under `dir` with
+    *     mode("overwrite"). Any index reads inside it (e.g. an id anti-join)
+    *     must build their plan INSIDE the closure — it runs after recovery
+    *     cleanup, so it sees the index without the partial batch.
+    *   - `updateSidecar(payload)`: atomically move the sidecar to
+    *     payload + this batch, AFTER the data adoption.
+    */
   def appendExactlyOnce(spark: SparkSession, root: String, liveSubdir: String,
       token: String, sidecarState: => Map[String, Double],
       writeStaged: String => Unit,
@@ -531,6 +548,22 @@ object BatchCommit {
       appendExactlyOnceUnlocked(spark, root, liveSubdir, token, sidecarState,
         writeStaged, updateSidecar, lease)
     }
+
+  /** Run one exactly-once append of a [[preflight]]ed batch under the
+    * replay rule (protocol step 4): false for an empty batch (no mark is
+    * written) and for a replay of the committed batch; a dangling begin of
+    * the same token resumes; a FRESH batch with clashing ids is refused
+    * with `clashRefusal` — `sidecarState` is evaluated only on a fresh
+    * attempt, before its begin mark, so the refusal mutates nothing.
+    */
+  def appendExactlyOnce(spark: SparkSession, root: String, liveSubdir: String,
+      batch: Preflight, clashRefusal: => String,
+      sidecarState: => Map[String, Double],
+      writeStaged: String => Unit,
+      updateSidecar: Map[String, Double] => Unit): Boolean =
+    batch.rows > 0L && appendExactlyOnce(spark, root, liveSubdir, batch.token,
+      sidecarState = { require(batch.clashes == 0L, clashRefusal); sidecarState },
+      writeStaged = writeStaged, updateSidecar = updateSidecar)
 
   private def appendExactlyOnceUnlocked(spark: SparkSession, root: String,
       liveSubdir: String,

@@ -587,9 +587,11 @@ object IvfIndex {
     val centroids = graft.core.MetaIo.floatMatrix(
       graft.core.MetaIo.parse(graft.core.MetaIo.read(spark, metaPath)).path("centroids"))
     val model = IvfModel(centroids)
+    val pre0 = graft.core.BatchCommit.preflight(df, idCol,
+      graft.core.BatchCommit.readTombstones(spark, path))
     // An empty batch is a no-op, not an error: vecDimOf would fall back to
     // the session embedder's dim and raise a spurious dim-mismatch.
-    if (df.isEmpty) return
+    if (pre0.rows == 0L) return
     val indexed = EmbedOps.semIndex(df, c)
     val v = EmbedOps.vecCol(c)
     val dim = EmbedOps.vecDimOf(indexed, v)
@@ -604,11 +606,9 @@ object IvfIndex {
     require(payload.schema.fieldNames.toSet == existing,
       s"IvfIndex.append: batch columns ${payload.schema.fieldNames.toSet} " +
         s"do not match the saved layout $existing (same idCol and vector column required)")
-    // A tombstoned id would be silently swallowed by load()'s anti-join —
-    // refuse the batch loudly; compactDeletes first frees the id.
-    graft.core.BatchCommit.requireNotTombstoned(df, idCol, path, "IvfIndex.append")
-    val tok = token.getOrElse(graft.core.BatchCommit.batchToken(df, idCol))
-    graft.core.BatchCommit.appendExactlyOnce(spark, path, "cells", tok,
+    val pre = token.fold(pre0)(t => pre0.copy(token = t))
+    graft.core.BatchCommit.appendExactlyOnce(spark, path, "cells", pre,
+      graft.core.BatchCommit.tombstonedRefusal("IvfIndex.append", path),
       sidecarState = Map.empty,
       writeStaged = staging =>
         payload

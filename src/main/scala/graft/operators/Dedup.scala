@@ -84,17 +84,6 @@ object Dedup {
   /** Candidate near-duplicate pairs via MinHash-LSH, verified with exact
     * n-gram Jaccard ≥ `threshold`. Returns (id1, id2, jaccard) with id1<id2.
     */
-  /** Spread a low-partition input (small files) to cluster parallelism
-    * before CPU-heavy per-row stages; large inputs pass through untouched.
-    * Decided from logical-plan size stats, not `df.rdd.getNumPartitions` —
-    * instantiating the RDD lineage would physically plan the query a
-    * second time outside AQE. A scan gets ~sizeInBytes/maxPartitionBytes
-    * partitions, so below one maxPartitionBytes per core the input cannot
-    * fill the cluster and is worth an (O(small) bytes) spread shuffle.
-    */
-  private def parallelize(df: DataFrame): DataFrame =
-    graft.core.Parallelism.spread(df)
-
   /** MinHash+LSH near-duplicate pairs at exact-shingle Jaccard ≥
     * `threshold`, with EXACT PRE-COLLAPSE (default): byte-identical texts
     * are grouped by content fingerprint first, each group contributes
@@ -190,7 +179,7 @@ object Dedup {
     */
   private def textCollapseMarked(dfIn: DataFrame, textCol: String,
       idCol: String): DataFrame =
-    parallelize(dfIn)
+    graft.core.Parallelism.spread(dfIn)
       .select(col(idCol).cast("long").as("id"), col(textCol))
       .withColumn("__fp", xxhash64(col(textCol)))
       .withColumn("__rep", min(col("id")).over(
@@ -211,7 +200,7 @@ object Dedup {
   private def minhashPairsExhaustive(dfIn: DataFrame, textCol: String,
       idCol: String, threshold: Double, numHashes: Int, bands: Int,
       shingleLen: Int): DataFrame = {
-    val df = parallelize(dfIn)
+    val df = graft.core.Parallelism.spread(dfIn)
     val rowsPerBand = numHashes / bands
     // ONE scan of the corpus computes both per-row artifacts with tight-loop
     // custom expressions (no shingle-string materialization, no explode, no
@@ -525,7 +514,7 @@ object Dedup {
       return withExactCollapse(dfIn, textCol, idCol, lit(0).as("dist"))(
         reps => simhashPairs(reps, textCol, "__rep_id", maxDist,
           collapseExact = false))
-    val df = parallelize(dfIn)
+    val df = graft.core.Parallelism.spread(dfIn)
     // Signature as ONE tight per-row loop (custom expression, same pattern
     // as the minhash signature): per token a single FNV-1a hash and 64 ±1
     // votes, all row-local — no token explode, no full-corpus shuffle into
@@ -637,7 +626,7 @@ object Dedup {
     require(n >= 1, s"ngramNovelty: n $n must be >= 1")
     // Spread the scan: a small-file corpus arrives in one partition and
     // the shingle explode + df aggregate would run single-task.
-    val grams = parallelize(df).select(col(idCol).as("id"),
+    val grams = graft.core.Parallelism.spread(df).select(col(idCol).as("id"),
         explode(array_distinct(shingles(col(textCol), n))).as("g"))
     val dfreq = grams.groupBy("g").agg(count(lit(1)).as("df"))
     grams.join(dfreq, "g")
@@ -905,8 +894,8 @@ object Dedup {
     // one scan partition and the signature/winnow kernels (the save's
     // whole cost) would run on ONE task — profiled 1.5–3.4 s single-task
     // jobs in every index-building gate at sf0.1.
-    dedupState(parallelize(df), textCol, idCol, numHashes, shingleLen,
-        winnow = winnow)
+    dedupState(graft.core.Parallelism.spread(df), textCol, idCol, numHashes,
+        shingleLen, winnow = winnow)
       .write.mode("overwrite").parquet(s"$path/docs")
     // The signature/shingle parameters are part of the index format: a
     // reader recomputing them with different values would silently kill
@@ -953,43 +942,14 @@ object Dedup {
     // index MUST carry the same fingerprint column or passage screening
     // silently loses the appended docs.
     val winnow = indexWinnowParams(spark, path)
-    // ONE job computes the batch's emptiness, content token AND (error
-    // mode) the id-overlap preflight — the former isEmpty + batchToken +
-    // semi-join ladder was three driver jobs per microbatch. The token is
-    // still over the RAW batch ids (an index-dependent filter would
-    // re-token a recovery replay): the left join against the DISTINCT
-    // index ids emits exactly one row per batch row (≤ 1 match each), so
-    // count and XOR-hash equal batchToken(df)'s on every replay.
-    val pre = {
-      val hashed = df.select(col(idCol).cast("long").as("__bid"),
-        xxhash64(col(idCol).cast("string")).as("__h"))
-      val joined =
-        if (onExistingIds == "error")
-          hashed.join(graft.core.BatchCommit.readData(spark, path, "docs")
-            .select(col("id").as("__iid")).distinct(),
-            col("__bid") === col("__iid"), "left")
-        else hashed.withColumn("__iid", lit(null).cast("long"))
-      joined.agg(count(lit(1)), expr("bit_xor(__h)"),
-        count(col("__iid"))).head()
-    }
-    if (pre.getLong(0) == 0L) return
-    val token = graft.core.BatchCommit.tokenOf(pre.getLong(0),
-      if (pre.isNullAt(1)) 0L else pre.getLong(1))
-    val mark = graft.core.BatchCommit.readMark(spark, path)
-    // An exact replay of a COMMITTED batch must short-circuit before the
-    // preflight: its ids are in the index precisely because it committed.
-    if (mark.exists(m => m.done && m.token == token)) return
-    val resuming = mark.exists(m => !m.done && m.token == token)
-    if (!resuming && onExistingIds == "error") {
-      // Preflight BEFORE the begin mark so a misuse fails without mutating
-      // anything. Skipped when resuming an interrupted append: the index
-      // may legitimately hold a partial prefix of this very batch then.
-      require(pre.getLong(2) == 0L,
-        s"appendToDedupIndex: batch contains ids already in the index at " +
-          s"$path — append only dropAgainstIndex survivors with new ids, or " +
-          "pass onExistingIds=\"drop\" to anti-join them away")
-    }
-    graft.core.BatchCommit.appendExactlyOnce(spark, path, "docs", token,
+    val pre = graft.core.BatchCommit.preflight(df, idCol,
+      if (onExistingIds == "error")
+        Some(graft.core.BatchCommit.readData(spark, path, "docs").select("id"))
+      else None)
+    graft.core.BatchCommit.appendExactlyOnce(spark, path, "docs", pre,
+      s"appendToDedupIndex: batch contains ids already in the index at " +
+        s"$path — append only dropAgainstIndex survivors with new ids, or " +
+        "pass onExistingIds=\"drop\" to anti-join them away",
       sidecarState = Map.empty,
       writeStaged = staging => {
         // Plan built inside the closure: the anti-join must list the index
@@ -1000,8 +960,8 @@ object Dedup {
               .select(col("id").as("__eid")),
               col(idCol).cast("long") === col("__eid"), "left_anti")
           else df
-        dedupState(parallelize(batch), textCol, idCol, numHashes, shingleLen,
-            winnow = winnow)
+        dedupState(graft.core.Parallelism.spread(batch), textCol, idCol,
+            numHashes, shingleLen, winnow = winnow)
           .write.mode("overwrite").parquet(staging)
       },
       updateSidecar = _ => ())
@@ -1048,11 +1008,12 @@ object Dedup {
       s"flagPassagesAgainstIndex: the index at $path carries no winnow " +
         "fingerprints — rebuild it with saveDedupIndex(..., winnowK > 0)")
     val (k, w) = winnow.get
-    val (batchFps, blocksB) = graft.core.Persist.stageTracked(parallelize(df)
-      .filter(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("__bid"),
-        transform(shingles(col(textCol), k), g => md5(g)).as("__hs"))
-      .select(col("__bid"), explode(winnowFromHashes(col("__hs"), w)).as("__fp")))
+    val (batchFps, blocksB) = graft.core.Persist.stageTracked(
+      graft.core.Parallelism.spread(df)
+        .filter(col(idCol).isNotNull && col(textCol).isNotNull)
+        .select(col(idCol).cast("long").as("__bid"),
+          transform(shingles(col(textCol), k), g => md5(g)).as("__hs"))
+        .select(col("__bid"), explode(winnowFromHashes(col("__hs"), w)).as("__fp")))
     val idxFps = graft.core.BatchCommit.readData(spark, path, "docs")
       .select(col("id").as("__iid"), explode(col("wfp")).as("__fp"))
     // Exact candidate budget BEFORE the join (the fuzzy-join convention):
@@ -1147,7 +1108,8 @@ object Dedup {
     // ONE scan of the new batch computes all three narrow artifacts; every
     // downstream stage (exact match, banding, verify) reads the staged
     // frame, and only the final anti-join touches the payload again.
-    val newBase = dedupState(parallelize(df), textCol, idCol, numHashes, shingleLen)
+    val newBase = dedupState(graft.core.Parallelism.spread(df), textCol, idCol,
+        numHashes, shingleLen)
       .transform(graft.core.Persist.stage(_))
     val exactIds = newBase.select(col("id"), col("fp"))
       .join(idx.select(col("fp")).distinct(), Seq("fp"), "left_semi")

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.core.{Persist, Sem}
-import graft.llm.{CachedLM, LMClient, LMRequest, UsageLimit, UsageTracker}
+import graft.llm.{CachedLM, LMClient, LMRequest, LMResult, UsageLimit, UsageTracker}
 
 /** The physical core of every semantic operator: a `mapPartitions` stage that
   * batches rows into LLM requests (reference physical model: batched API
@@ -38,26 +38,9 @@ object LLMStage {
       lm: LMClient,
       outCol: String,
       mkReq: Row => LMRequest
-  ): DataFrame = {
-    val df = parallelize(dfIn)
-    val outSchema = StructType(df.schema.fields :+
-      org.apache.spark.sql.types.StructField(outCol, StringType, nullable = true))
-    val stats = UsageTracker.forSession(df.sparkSession)
-    UsageLimit.checkBeforeStage(stats, lm)
-    val lmEff = if (Sem.settings.enableCache) CachedLM(lm, stats) else lm
-    val cached = lmEff.isInstanceOf[CachedLM]
-    val batch = lmEff.maxBatchSize
-    val out = df.mapPartitions { iter =>
-      iter.grouped(batch).flatMap { rows =>
-        val reqs = rows.map(mkReq)
-        val results = lmEff.complete(reqs)
-        stats.record(reqs, results)
-        if (!cached) stats.recordPhysical(reqs.length.toLong)
-        rows.lazyZip(results).map { (r, res) => Row.fromSeq(r.toSeq :+ res.output) }
-      }
-    }(Encoders.row(outSchema))
-    if (Sem.settings.persistLlmOutputs) Persist.stage(out, eager = false) else out
-  }
+  ): DataFrame =
+    stage(dfIn, lm, Seq(StructField(outCol, StringType, nullable = true)), mkReq)(
+      res => Seq(res.output))
 
   /** Like [[appendAnswer]] but also appends the positive-token probability
     * (logprob-derived) column — the helper-model pass of cascades.
@@ -68,12 +51,18 @@ object LLMStage {
       outCol: String,
       probCol: String,
       mkReq: Row => LMRequest
-  ): DataFrame = {
+  ): DataFrame =
+    stage(dfIn, lm, Seq(StructField(outCol, StringType, nullable = true),
+      StructField(probCol, DoubleType, nullable = true)), mkReq)(
+      res => Seq(res.output, res.positiveProb.orNull))
+
+  /** The one stage body: batch each partition's rows into `lm` calls and
+    * append `cells(result)` as the `outFields` columns.
+    */
+  private def stage(dfIn: DataFrame, lm: LMClient, outFields: Seq[StructField],
+      mkReq: Row => LMRequest)(cells: LMResult => Seq[Any]): DataFrame = {
     val df = parallelize(dfIn)
-    val outSchema = StructType(df.schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField(outCol, StringType, nullable = true),
-      org.apache.spark.sql.types.StructField(probCol,
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
+    val outSchema = StructType(df.schema.fields ++ outFields)
     val stats = UsageTracker.forSession(df.sparkSession)
     UsageLimit.checkBeforeStage(stats, lm)
     val lmEff = if (Sem.settings.enableCache) CachedLM(lm, stats) else lm
@@ -85,9 +74,7 @@ object LLMStage {
         val results = lmEff.complete(reqs)
         stats.record(reqs, results)
         if (!cached) stats.recordPhysical(reqs.length.toLong)
-        rows.lazyZip(results).map { (r, res) =>
-          Row.fromSeq(r.toSeq ++ Seq(res.output, res.positiveProb.orNull))
-        }
+        rows.lazyZip(results).map { (r, res) => Row.fromSeq(r.toSeq ++ cells(res)) }
       }
     }(Encoders.row(outSchema))
     if (Sem.settings.persistLlmOutputs) Persist.stage(out, eager = false) else out

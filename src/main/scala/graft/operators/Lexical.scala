@@ -334,23 +334,13 @@ object LexIndex {
     require(existing.contains("dl"),
       s"LexIndex.append: $path uses the legacy postings layout (no dl column) — rebuild with save()")
     val (_, _, nBuckets, _) = readStats(path)
-    // One narrow aggregate computes the batch's EMPTINESS, stats delta AND
-    // content token (count + order-independent XOR id hash, so every
-    // replay of this batch re-derives the same token) — the separate
-    // isEmpty probe job is folded into it.
-    val r = docLengths(df, textCol, idCol)
-      .select(col("dl"), xxhash64(col("id").cast("string")).as("__h"))
-      .agg(count(lit(1)).cast("double"), sum(col("dl")).cast("double"),
-        expr("bit_xor(__h)"),
-        sum(when(col("dl") === 0, 1).otherwise(0)).cast("double")).head()
-    if (r.getDouble(0) == 0.0) return
-    // A tombstoned id's postings would be swallowed by search's anti-join.
-    graft.core.BatchCommit.requireNotTombstoned(
-      df.select(col(idCol).as("id")), "id", path, "LexIndex.append")
-    val (dn, dsum) = (r.getDouble(0), r.getDouble(1))
-    val dnEmpty = if (r.isNullAt(3)) 0.0 else r.getDouble(3)
-    val token = graft.core.BatchCommit.tokenOf(dn.toLong, r.getLong(2))
-    graft.core.BatchCommit.appendExactlyOnce(spark, path, "postings", token,
+    // The preflight job also sums the batch's stats delta (Σdl, empty docs).
+    val pre = graft.core.BatchCommit.preflight(docLengths(df, textCol, idCol),
+      "id", graft.core.BatchCommit.readTombstones(spark, path),
+      sum(col("dl")).cast("double"),
+      sum(when(col("dl") === 0, 1).otherwise(0)).cast("double"))
+    graft.core.BatchCommit.appendExactlyOnce(spark, path, "postings", pre,
+      graft.core.BatchCommit.tombstonedRefusal("LexIndex.append", path),
       sidecarState = {
         val (n0, sumdl0, _, nEmpty0) = readStats(path)
         Map("n0" -> n0, "sumdl0" -> sumdl0, "nEmpty0" -> nEmpty0)
@@ -361,8 +351,8 @@ object LexIndex {
           .write.mode("overwrite").partitionBy(bucketCol)
           .parquet(staging),
       updateSidecar = p =>
-        writeStats(path, p("n0") + dn, p("sumdl0") + dsum, nBuckets,
-          p.getOrElse("nEmpty0", 0.0) + dnEmpty))
+        writeStats(path, p("n0") + pre.rows, p("sumdl0") + pre.extra.getDouble(0),
+          nBuckets, p.getOrElse("nEmpty0", 0.0) + pre.extra.getDouble(1)))
   }
 
   /** Delete documents from a saved index without rewriting postings —

@@ -325,6 +325,95 @@ class BatchCommitSpec extends SparkSpec {
     assert(loaded.count() == 4, "a committed batch replay must not duplicate vectors")
   }
 
+  test("preflight token is pinned at 1 and 7 partitions (marks already on " +
+      "disk stay replayable)") {
+    val fixed = (1L to 12L).map(i => (i * 7919L, s"doc $i")).toDF("doc_id", "text")
+    for (parts <- Seq(1, 7)) {
+      val pre = BatchCommit.preflight(fixed.repartition(parts), "doc_id", None)
+      assert(pre.token == PinnedToken && pre.rows == 12L && pre.clashes == 0L,
+        s"$parts partitions: $pre")
+    }
+  }
+
+  test("LexIndex and IvfIndex: a committed batch replays as a no-op even " +
+      "after one of its ids was deleted") {
+    val p = tmp("lex_replay_deleted")
+    LexIndex.save(corpusA, "text", "doc_id", p, nBuckets = 8)
+    LexIndex.append(batchB, "text", "doc_id", p)
+    LexIndex.delete(batchB.filter($"doc_id" === 3L), "doc_id", p)
+    val committed = BatchCommit.readMark(spark, p)
+    LexIndex.append(batchB, "text", "doc_id", p) // at-least-once redelivery
+    assert(BatchCommit.readMark(spark, p) == committed)
+    assert(searchRows(p).map(_._1).toSet == Set(1L, 2L, 4L))
+
+    val (ivf, extra) = ivfIndex("ivf_replay_deleted")
+    graft.embed.IvfIndex.append(extra, "emb", "id", ivf)
+    graft.embed.IvfIndex.delete(extra.filter($"id" === 10L), "id", ivf)
+    graft.embed.IvfIndex.append(extra, "emb", "id", ivf)
+    assert(graft.embed.IvfIndex.load(spark, ivf)._1.select("id").as[Long]
+      .collect().sorted.toSeq == Seq(0L, 1L, 11L))
+  }
+
+  test("LexIndex and dedup index: an empty batch is a no-op and writes no mark") {
+    val lex = tmp("lex_empty")
+    LexIndex.save(corpusA, "text", "doc_id", lex, nBuckets = 8)
+    LexIndex.append(batchB.filter($"doc_id" < 0L), "text", "doc_id", lex)
+    assert(BatchCommit.readMark(spark, lex).isEmpty)
+    assert(searchRows(lex).map(_._1).toSet == Set(1L, 2L))
+    val dd = tmp("dedup_empty")
+    Dedup.saveDedupIndex(corpusA, "text", "doc_id", dd, numHashes = 16, shingleLen = 2)
+    Dedup.appendToDedupIndex(batchB.filter($"doc_id" < 0L), "text", "doc_id", dd)
+    assert(BatchCommit.readMark(spark, dd).isEmpty)
+    assert(spark.read.parquet(s"$dd/docs").count() == 2)
+  }
+
+  test("LexIndex and IvfIndex: a fresh batch holding a tombstoned id is " +
+      "refused before its begin mark") {
+    val p = tmp("lex_fresh_tombstoned")
+    LexIndex.save(corpusA, "text", "doc_id", p, nBuckets = 8)
+    LexIndex.append(batchB, "text", "doc_id", p)
+    LexIndex.delete(corpusA.filter($"doc_id" === 2L), "doc_id", p)
+    val committed = BatchCommit.readMark(spark, p)
+    val fresh = Seq((2L, "spark streaming again"), (7L, "a new document"))
+      .toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      LexIndex.append(fresh, "text", "doc_id", p)
+    }
+    assert(e.getMessage.contains("LexIndex.append") &&
+      e.getMessage.contains("tombstoned"), e.getMessage)
+    assert(BatchCommit.readMark(spark, p) == committed,
+      "a refused batch must not write its begin mark")
+
+    val (ivf, _) = ivfIndex("ivf_fresh_tombstoned")
+    graft.embed.IvfIndex.delete(vecs(1L -> 1), "id", ivf)
+    val e2 = intercept[IllegalArgumentException] {
+      graft.embed.IvfIndex.append(vecs(1L -> 1, 12L -> 5), "emb", "id", ivf)
+    }
+    assert(e2.getMessage.contains("IvfIndex.append") &&
+      e2.getMessage.contains("tombstoned"), e2.getMessage)
+    assert(BatchCommit.readMark(spark, ivf).isEmpty,
+      "a refused batch must not write its begin mark")
+  }
+
+  /** The fixed batch's token as marks already on disk carry it: a format
+    * change would make their batches unreplayable.
+    */
+  private val PinnedToken = "35628242cbad35b3n12"
+
+  private def vecs(rows: (Long, Int)*) = rows.map { case (id, axis) =>
+    (id, Seq.tabulate(8)(d => if (d == axis) 1.0f else 0.05f))
+  }.toDF("id", graft.operators.EmbedOps.vecCol("emb"))
+
+  /** A saved IVF index holding ids 0 and 1, and a batch of ids 10 and 11. */
+  private def ivfIndex(prefix: String): (String, org.apache.spark.sql.DataFrame) = {
+    val p = tmp(prefix)
+    val (indexed, model) =
+      graft.embed.IvfIndex.build(vecs(0L -> 0, 1L -> 1), "emb", nCells = 2, seed = 7)
+    graft.embed.IvfIndex.save(indexed, model, "emb", "id", p)
+    indexed.unpersist()
+    (p, vecs(10L -> 3, 11L -> 4))
+  }
+
   private implicit class IterOps[T](it: java.util.Iterator[T]) {
     def asScala: Iterator[T] = new Iterator[T] {
       def hasNext: Boolean = it.hasNext
