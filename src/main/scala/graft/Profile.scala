@@ -62,6 +62,9 @@ object Profile {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         last = (System.nanoTime() - t0) / 1e9
+        // Listener events arrive asynchronously: drain them while still
+        // recording, so the pass's last jobs are in the map with their ends.
+        org.apache.spark.sql.graft.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
         recording = false
         try {
           spark.sparkContext.getPersistentRDDs.values

@@ -103,12 +103,17 @@ object Queries {
 
   /** Gate-internal set-equality cross-check in ONE job: ±1 tags unioned,
     * grouped on every column (SQL grouping equality — the same float
-    * normalization `except` uses), any nonzero tag sum = a row on one side
-    * only. The `a.except(b).isEmpty && b.except(a).isEmpty` form it
-    * replaces ran TWO jobs and evaluated each side's plan twice — for
-    * lifecycle gates whose sides are index searches, that re-ran every
-    * search. Both sides here have unique rows (top-k by unique id /
-    * aggregates by unique key), where set and multiset equality coincide.
+    * normalization `except` uses), any nonzero tag sum = a divergent row.
+    * The `a.except(b).isEmpty && b.except(a).isEmpty` form it replaces ran
+    * TWO jobs and evaluated each side's plan twice — for lifecycle gates
+    * whose sides are index searches, that re-ran every search.
+    *
+    * Precondition: each side has unique rows (top-k by unique id /
+    * aggregates by unique key). The check compares multisets, which equal
+    * sets only then — a side with legitimate duplicate rows fails here
+    * although `except` both ways would pass. On failure only, a second job
+    * reports how many divergent rows are on one side only (content) and
+    * how many are on both sides with different counts (multiplicity).
     */
   private def requireSameRows(a: org.apache.spark.sql.DataFrame,
       b: org.apache.spark.sql.DataFrame, msg: String): Unit = {
@@ -116,9 +121,14 @@ object Queries {
     val diff = a.withColumn("__side", lit(1L))
       .unionByName(b.withColumn("__side", lit(-1L)))
       .groupBy(cols: _*)
-      .agg(sum(col("__side")).as("__d"))
+      .agg(sum(col("__side")).as("__d"), count(lit(1)).as("__n"))
       .filter(col("__d") =!= 0L)
-    require(diff.isEmpty, msg)
+    require(diff.isEmpty, {
+      val oneSide = abs(col("__d")) === col("__n")
+      val split = diff.agg(count(when(oneSide, 1)), count(when(!oneSide, 1))).head()
+      s"$msg (divergent rows: ${split.getLong(0)} on one side only (content), " +
+        s"${split.getLong(1)} on both sides with different counts (multiplicity))"
+    })
   }
 
   // Escapes for the replay payload builders: the parsers unescape, so the
@@ -1645,11 +1655,11 @@ object Queries {
     "lm_cache_replay" -> ((s, dir) => {
       // The response-cache determinism contract (reference virtual-vs-
       // physical usage accounting, lotus/models/lm.py:497-529) as a HARD
-      // gate: the same sem_map stage runs twice under CachedLM; the second
-      // pass must be served entirely from the response cache. Its physical
-      // call count (≡ 0) and virtual request count (≡ corpus rows) ride the
-      // result as gated columns — a cache that misses, double-counts, or
-      // stops recording hash-mismatches.
+      // gate: the same sem_map stage runs twice with the response cache
+      // on; the second pass must be served entirely from the cache. Its
+      // physical call count (≡ 0) and virtual request count (≡ corpus rows)
+      // ride the result as gated columns — a cache that misses,
+      // double-counts, or stops recording hash-mismatches.
       graft.llm.ResponseCache.clear()
       Sem.withSettings(Sem.settings.copy(
           lm = FakeLM(FakeBehavior.FirstWords("Text", 3)), enableCache = true)) {

@@ -53,12 +53,7 @@ final case class SemSettings(
       * per-group top-k) — reference parallel_groupby_max_threads
       * (settings.py:15-30). Spark supports concurrent job submission. */
     parallelGroupbyMaxThreads: Int = 8
-) extends Serializable {
-
-  /** The operators' physical LM: cache-wrapped when enabled. */
-  def activeLm(stats: graft.llm.UsageStats): graft.llm.LMClient =
-    if (enableCache) graft.llm.CachedLM(lm, stats) else lm
-}
+) extends Serializable
 
 object Sem {
   private val dyn = new scala.util.DynamicVariable[SemSettings](SemSettings())

@@ -65,15 +65,15 @@ object IvfVS {
     * DIFFERENT IvfVS instance can re-index the same path, so a
     * per-instance cache would serve a decision whose file another
     * instance just deleted — index() invalidates here for everyone.
-    * Entries carry the sidecar's MODIFICATION TIME and are re-validated
-    * against it on every hit (one FS metadata call — the parse is still
-    * skipped): an EXTERNAL writer re-indexing the same path, or a
+    * Entries carry the sidecar's (MODIFICATION TIME, LENGTH) and are
+    * re-validated against it on every hit (one FS metadata call — the parse
+    * is still skipped): an EXTERNAL writer re-indexing the same path, or a
     * same-JVM race that re-caches a stale decision between index()'s
-    * remove and the new sidecar's write, is caught by the mtime mismatch
+    * remove and the new sidecar's write, is caught by the stamp mismatch
     * instead of poisoning every later search.
     */
   private[embed] val autoProbeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Int)]()
 }
 
 final case class IvfVS(basePath: String, nCells: Int = 256, nProbe: Int = 8,
@@ -115,40 +115,38 @@ final case class IvfVS(basePath: String, nCells: Int = 256, nProbe: Int = 8,
         s""""k":$autoRecallK,"sampleQueries":$autoSampleQueries}""")
     // Invalidate AFTER the new sidecar lands too: a concurrent search can
     // re-cache the OLD decision between index()'s remove and this write;
-    // the mtime validation would catch it, this closes the window outright.
+    // the stamp validation would catch it, this closes the window outright.
     IvfVS.autoProbeCache.remove(autoProbePath(collection))
   }
 
   /** The probe tier a search actually uses: the configured one, or the
-    * persisted auto decision. A missing sidecar under nProbe = 0 fails
-    * loudly — it means the index was built by a fixed-probe config (or a
-    * pre-auto version) and carries no measured decision to trust.
+    * persisted auto decision. The cached decision is validated against the
+    * sidecar's (modification time, length), so a rewrite landing within the
+    * filesystem's timestamp granularity is still caught when its size
+    * differs. A missing sidecar under nProbe = 0 fails loudly — it means the
+    * index was built by a fixed-probe config (or a pre-auto version) and
+    * carries no measured decision to trust; any other I/O error propagates
+    * with its own cause.
     */
-  /** The sidecar file's modification time, or -1 when missing/unreadable —
-    * the cache-validation stamp.
-    */
-  private def sidecarMtime(spark: SparkSession, p: String): Long = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    try hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(hp).getModificationTime
-    catch { case _: java.io.IOException => -1L }
-  }
-
   private def effectiveProbes(spark: SparkSession, collection: String): Int =
     if (nProbe > 0) nProbe
     else {
       val key = autoProbePath(collection)
-      val mtime = sidecarMtime(spark, key)
-      require(mtime >= 0,
-        s"IvfVS: nProbe = 0 (auto) but $key is " +
-          "missing — re-index this collection with an nProbe = 0 config " +
-          "so the recall-aware tier is measured and persisted")
+      val hp = new org.apache.hadoop.fs.Path(key)
+      val status =
+        try hp.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(hp)
+        catch { case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(s"IvfVS: nProbe = 0 (auto) but $key is " +
+            "missing — re-index this collection with an nProbe = 0 config " +
+            "so the recall-aware tier is measured and persisted")
+        }
+      val stamp = (status.getModificationTime, status.getLen)
       val cached = IvfVS.autoProbeCache.get(key)
-      if (cached != null && cached._1 == mtime) cached._2
+      if (cached != null && cached._1 == stamp) cached._2
       else {
         val p = graft.core.MetaIo.parse(graft.core.MetaIo.read(spark, key))
           .path("nProbe").intValue()
-        IvfVS.autoProbeCache.put(key, (mtime, p))
+        IvfVS.autoProbeCache.put(key, (stamp, p))
         p
       }
     }

@@ -41,36 +41,3 @@ object ResponseCache {
     java.util.Base64.getEncoder.encodeToString(md.digest())
   }
 }
-
-/** LMClient wrapper adding the response cache. Virtual usage (every request
-  * the operators issue) is recorded by the call sites; this wrapper accounts
-  * the physical split: cache hits vs requests that actually reached the
-  * underlying model (reference virtual/physical usage, lm.py:497-529).
-  */
-final case class CachedLM(inner: LMClient, stats: UsageStats) extends LMClient {
-  private val cfg = inner.toString
-
-  override def maxBatchSize: Int = inner.maxBatchSize
-  override def maxCtxLen: Int = inner.maxCtxLen
-  override def maxTokens: Int = inner.maxTokens
-  override def countTokens(s: String): Int = inner.countTokens(s)
-  override def modelName: String = inner.modelName
-
-  override def complete(batch: Seq[LMRequest]): Seq[LMResult] = {
-    val keys = batch.map(r => ResponseCache.key(cfg, r))
-    val cached = keys.map(ResponseCache.get).toArray
-    val missIdx = cached.zipWithIndex.collect { case (None, i) => i }
-    if (stats != null) {
-      stats.recordCacheHits((batch.length - missIdx.length).toLong)
-      stats.recordPhysical(missIdx.length.toLong)
-    }
-    if (missIdx.nonEmpty) {
-      val missRes = inner.complete(missIdx.toIndexedSeq.map(batch))
-      missIdx.toIndexedSeq.lazyZip(missRes).foreach { (i, r) =>
-        ResponseCache.put(keys(i), r)
-        cached(i) = Some(r)
-      }
-    }
-    cached.toIndexedSeq.map(_.get)
-  }
-}

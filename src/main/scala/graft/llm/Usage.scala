@@ -5,7 +5,10 @@ import org.apache.spark.util.LongAccumulator
 
 /** Cluster-wide LLM usage accounting (reference lotus/models/lm.py:497-529
   * tracks usage in-process; on Spark the counters must be accumulators so
-  * executor-side calls aggregate on the driver).
+  * executor-side calls aggregate on the driver). Only [[MeteredLM]] writes
+  * them: every operator's LM calls go through that one client, which counts
+  * virtual usage (every request issued) and the physical split (requests
+  * that reached the model vs response-cache hits) once per batch.
   */
 final class UsageStats(
     val calls: LongAccumulator,
@@ -17,18 +20,17 @@ final class UsageStats(
     /** Requests served from the response cache. */
     val cacheHits: LongAccumulator) extends Serializable {
 
-  /** Virtual accounting: every request an operator issued, cached or not
-    * (reference virtual usage, lm.py:497-529).
+  /** One `complete` call: `batch` issued, `physical` of them sent to the
+    * model, the rest served from the cache.
     */
-  def record(batch: Seq[LMRequest], results: Seq[LMResult]): Unit = {
+  private[llm] def record(batch: Seq[LMRequest], results: Seq[LMResult], physical: Int): Unit = {
     calls.add(1L)
     requests.add(batch.length.toLong)
+    physicalRequests.add(physical.toLong)
+    cacheHits.add((batch.length - physical).toLong)
     batch.foreach(r => promptChars.add(r.messages.map(_.content.length.toLong).sum))
     results.foreach(r => outputChars.add(r.output.length.toLong))
   }
-
-  def recordPhysical(n: Long): Unit = physicalRequests.add(n)
-  def recordCacheHits(n: Long): Unit = cacheHits.add(n)
 
   /** ≈tokens at 4 chars/token, the engine-wide estimate. */
   def report: String =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.core.{Persist, Sem}
-import graft.llm.{CachedLM, LMClient, LMRequest, LMResult, UsageLimit, UsageTracker}
+import graft.llm.{LMClient, LMRequest, MeteredLM}
 
 /** The physical core of every semantic operator: a `mapPartitions` stage that
   * batches rows into LLM requests (reference physical model: batched API
@@ -16,8 +16,8 @@ import graft.llm.{CachedLM, LMClient, LMRequest, LMResult, UsageLimit, UsageTrac
   * the executor-local response cache (retried tasks re-read identical
   * answers, [[graft.llm.ResponseCache]]) and lazy checkpointing of stage
   * output (downstream actions never recompute the LLM stage,
-  * [[graft.core.Persist]]). Usage limits are enforced driver-side before
-  * each stage is built.
+  * [[graft.core.Persist]]). Calls go through [[graft.llm.MeteredLM]], which
+  * enforces the usage limit when the stage is built and meters every batch.
   */
 object LLMStage {
 
@@ -38,9 +38,7 @@ object LLMStage {
       lm: LMClient,
       outCol: String,
       mkReq: Row => LMRequest
-  ): DataFrame =
-    stage(dfIn, lm, Seq(StructField(outCol, StringType, nullable = true)), mkReq)(
-      res => Seq(res.output))
+  ): DataFrame = stage(dfIn, lm, outCol, None, mkReq)
 
   /** Like [[appendAnswer]] but also appends the positive-token probability
     * (logprob-derived) column — the helper-model pass of cascades.
@@ -51,32 +49,36 @@ object LLMStage {
       outCol: String,
       probCol: String,
       mkReq: Row => LMRequest
-  ): DataFrame =
-    stage(dfIn, lm, Seq(StructField(outCol, StringType, nullable = true),
-      StructField(probCol, DoubleType, nullable = true)), mkReq)(
-      res => Seq(res.output, res.positiveProb.orNull))
+  ): DataFrame = stage(dfIn, lm, outCol, Some(probCol), mkReq)
 
-  /** The one stage body: batch each partition's rows into `lm` calls and
-    * append `cells(result)` as the `outFields` columns.
+  /** The batch stage: spread the input, answer it, persist the answers. */
+  private def stage(dfIn: DataFrame, lm: LMClient, outCol: String, probCol: Option[String],
+      mkReq: Row => LMRequest): DataFrame = {
+    val out = answerPartitions(parallelize(dfIn), lm, outCol, probCol, mkReq)
+    if (Sem.settings.persistLlmOutputs) Persist.stage(out, eager = false) else out
+  }
+
+  /** The one stage body: batch each partition's rows into metered `lm`
+    * calls and append the answer as `outCol` (and its positive-token
+    * probability as `probCol`). It probes no partitions and checkpoints
+    * nothing, so it is also the streaming operators' stage; micro-batch
+    * retries are covered by the response cache when `enableCache` is on.
     */
-  private def stage(dfIn: DataFrame, lm: LMClient, outFields: Seq[StructField],
-      mkReq: Row => LMRequest)(cells: LMResult => Seq[Any]): DataFrame = {
-    val df = parallelize(dfIn)
-    val outSchema = StructType(df.schema.fields ++ outFields)
-    val stats = UsageTracker.forSession(df.sparkSession)
-    UsageLimit.checkBeforeStage(stats, lm)
-    val lmEff = if (Sem.settings.enableCache) CachedLM(lm, stats) else lm
-    val cached = lmEff.isInstanceOf[CachedLM]
-    val batch = lmEff.maxBatchSize
-    val out = df.mapPartitions { iter =>
+  private[graft] def answerPartitions(df: DataFrame, lm: LMClient, outCol: String,
+      probCol: Option[String], mkReq: Row => LMRequest): DataFrame = {
+    val outSchema = StructType(df.schema.fields ++ (StructField(outCol, StringType) +:
+      probCol.map(StructField(_, DoubleType)).toSeq))
+    val withProb = probCol.nonEmpty
+    val metered = MeteredLM.forStage(df.sparkSession, lm)
+    val batch = metered.maxBatchSize
+    df.mapPartitions { iter =>
       iter.grouped(batch).flatMap { rows =>
-        val reqs = rows.map(mkReq)
-        val results = lmEff.complete(reqs)
-        stats.record(reqs, results)
-        if (!cached) stats.recordPhysical(reqs.length.toLong)
-        rows.lazyZip(results).map { (r, res) => Row.fromSeq(r.toSeq ++ cells(res)) }
+        val results = metered.complete(rows.map(mkReq))
+        rows.lazyZip(results).map { (r, res) =>
+          Row.fromSeq(r.toSeq ++
+            (if (withProb) Seq(res.output, res.positiveProb.orNull) else Seq(res.output)))
+        }
       }
     }(Encoders.row(outSchema))
-    if (Sem.settings.persistLlmOutputs) Persist.stage(out, eager = false) else out
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{NLExpr, Persist, Sem}
-import graft.llm.{CachedLM, LMRequest, Prompts, UsageLimit, UsageTracker}
+import graft.llm.{LMRequest, MeteredLM, Prompts, UsageLimit}
 
 /** Hierarchical LLM aggregation (reference lotus/sem_ops/sem_agg.py:62-235):
   * pack documents into context-budgeted prompts, summarize each pack, repeat
@@ -102,9 +102,7 @@ object SemAgg {
       if (groupBy.isEmpty && df.columns.contains(PartitionIdCol))
         col(PartitionIdCol) +: orderBy
       else orderBy
-    val stats = UsageTracker.forSession(df.sparkSession)
-    val lm = s.activeLm(stats)
-    val cached = lm.isInstanceOf[CachedLM]
+    val lm = MeteredLM.forStage(df.sparkSession, s.lm)
 
     // Serialized doc per row, built natively (codegen) for the DEFAULT format.
     val docExpr = concat(docCols.map { c =>
@@ -155,7 +153,7 @@ object SemAgg {
     var curIds = Set.empty[Int]
     try {
     while (!done) {
-      UsageLimit.checkBeforeStage(stats, lm)
+      UsageLimit.checkBeforeStage(lm.stats, lm)
       // Partition count shrinks with the data: ≥4 rows per partition so
       // local packing (fan-in ≥ 2) keeps making progress; the first round
       // keeps the arranged partitioning (no extra shuffle).
@@ -172,10 +170,7 @@ object SemAgg {
             val docs = r.getSeq[Row](nGroupL + 1).map(_.getString(1))
             LMRequest(Prompts.aggFormatter(docs, instruction, leaf))
           }
-          val res = lmL.complete(reqs)
-          stats.record(reqs, res)
-          if (!cached) stats.recordPhysical(reqs.length.toLong)
-          rows.lazyZip(res).map { (r, out) =>
+          rows.lazyZip(lmL.complete(reqs)).map { (r, out) =>
             val ordMin = r.getSeq[Row](nGroupL + 1).head.getLong(0)
             Row.fromSeq((0 until nGroupL).map(r.get) ++ Seq(ordMin,
               s"[Source]: «${out.output}»\n"))
@@ -211,8 +206,7 @@ object SemAgg {
         val rows = cur.collect().sortBy(r =>
           ((0 until nGroup).map(i => String.valueOf(r.get(i))).mkString(""),
             r.getLong(nGroup)))
-        val folded = driverFold(rows.toIndexedSeq, nGroup, budget, lm, instruction,
-          isLeaf, stats, cached)
+        val folded = driverFold(rows.toIndexedSeq, nGroup, budget, lm, instruction, isLeaf)
         val spark = df.sparkSession
         // The collected round's blocks are consumed — the returned plan is
         // built from the driver-folded rows, not the staged frame.
@@ -254,8 +248,7 @@ object SemAgg {
     * distributed rounds, batched through the LM until one row per group.
     */
   private def driverFold(rows0: Seq[Row], nGroup: Int, budget: Long,
-      lm: graft.llm.LMClient, instruction: String, isLeaf0: Boolean,
-      stats: graft.llm.UsageStats, cached: Boolean): Seq[Row] = {
+      lm: graft.llm.LMClient, instruction: String, isLeaf0: Boolean): Seq[Row] = {
     var rows = rows0
     var isLeaf = isLeaf0
     var done = false
@@ -281,10 +274,7 @@ object SemAgg {
       val results = packs.toVector.grouped(lm.maxBatchSize).flatMap { chunk =>
         val reqs = chunk.map(p => graft.llm.LMRequest(
           Prompts.aggFormatter(p._3, instruction, leaf)))
-        val res = lm.complete(reqs)
-        stats.record(reqs, res)
-        if (!cached) stats.recordPhysical(reqs.length.toLong)
-        chunk.lazyZip(res).map { (p, out) =>
+        chunk.lazyZip(lm.complete(reqs)).map { (p, out) =>
           Row.fromSeq(p._1 ++ Seq(p._2, s"[Source]: «${out.output}»\n"))
         }
       }.toVector

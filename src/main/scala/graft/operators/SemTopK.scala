@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{NLExpr, Sem}
-import graft.llm.{LMClient, LMRequest, Prompts}
+import graft.llm.{LMClient, LMRequest, MeteredLM, Prompts}
 
 /** LLM-comparator top-k (reference lotus/sem_ops/sem_topk.py).
   *
@@ -34,29 +34,17 @@ object SemTopK {
     * sem_topk.py:176-273): helper answers whose confidence clears the
     * threshold are accepted; the uncertain rest are re-asked of the oracle.
     */
-  /** Batched call with usage accounting (driver-side coordination paths;
-    * the distributed naive path records through its own captured stats).
-    */
-  private def callBatch(lm: LMClient, reqs: Seq[LMRequest]): Seq[graft.llm.LMResult] = {
-    val res = lm.complete(reqs)
-    graft.llm.UsageTracker.get.foreach { st =>
-      st.record(reqs, res)
-      if (!lm.isInstanceOf[graft.llm.CachedLM]) st.recordPhysical(reqs.length.toLong)
-    }
-    res
-  }
-
   private def compareAll(lm: LMClient, docs: Seq[String], pivot: String, instr: String,
       helper: Option[(LMClient, Double)] = None): Seq[Boolean] = helper match {
     case None =>
       docs.grouped(lm.maxBatchSize).flatMap { chunk =>
         val reqs = chunk.map(d => LMRequest(Prompts.compareFormatter(d, pivot, instr)))
-        callBatch(lm, reqs).map(r => firstWins(r.output))
+        lm.complete(reqs).map(r => firstWins(r.output))
       }.toVector
     case Some((helperLm, threshold)) =>
       val reqs = docs.map(d => LMRequest(Prompts.compareFormatter(d, pivot, instr)))
       val helperRes = reqs.grouped(helperLm.maxBatchSize)
-        .flatMap(r => callBatch(helperLm, r)).toVector
+        .flatMap(helperLm.complete).toVector
       val results = new Array[Option[Boolean]](docs.length)
       val uncertain = scala.collection.mutable.ArrayBuffer[Int]()
       helperRes.zipWithIndex.foreach { case (res, i) =>
@@ -130,12 +118,9 @@ object SemTopK {
     val nle = NLExpr.parse(instr)
     nle.validate(df.columns.toIndexedSeq)
     val instruction = nle.instruction
-    val stats = graft.llm.UsageTracker.forSession(df.sparkSession)
-    graft.llm.UsageLimit.checkBeforeStage(stats, s.lm)
-    val lm = s.activeLm(stats)
-    val cascadeHelper: Option[(LMClient, Double)] =
-      cascadeThreshold.flatMap(t => s.helperLm.map(h =>
-        (if (s.enableCache) graft.llm.CachedLM(h, stats) else h, t)))
+    val lm = MeteredLM.forStage(df.sparkSession, s.lm)
+    val cascadeHelper: Option[(LMClient, Double)] = cascadeThreshold.flatMap(t =>
+      s.helperLm.map(h => (MeteredLM.forStage(df.sparkSession, h), t)))
 
     val withId = df.withColumn("__tk_id", monotonically_increasing_id()).persist()
     val totalRows = withId.count()
@@ -294,16 +279,11 @@ object SemTopK {
           StructField("win1", BooleanType)))
         val lmLocal = lm
         val instrLocal = instruction
-        val statsL = stats
-        val cachedL = lmLocal.isInstanceOf[graft.llm.CachedLM]
         val compared = pairs.mapPartitions { it =>
           it.grouped(lmLocal.maxBatchSize).flatMap { rows =>
             val reqs = rows.map(r => LMRequest(
               Prompts.compareFormatter(r.getString(2), r.getString(5), instrLocal)))
-            val res = lmLocal.complete(reqs)
-            statsL.record(reqs, res)
-            if (!cachedL) statsL.recordPhysical(reqs.length.toLong)
-            res.lazyZip(rows).map { (res1, r) =>
+            lmLocal.complete(reqs).lazyZip(rows).map { (res1, r) =>
               Row(r.getLong(1), r.getLong(4), firstWins(res1.output))
             }
           }

@@ -62,69 +62,35 @@ object StreamingOps {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
-  /** Streaming-safe LLM stage: the same batched mapPartitions core as the
-    * batch operators, minus everything streaming forbids (no rdd partition
-    * probing, no checkpointing — micro-batch retries are covered by the
-    * response cache when `enableCache` is on, which replays identical
-    * answers instead of re-asking).
-    */
-  private def appendAnswerStream(df: DataFrame, lm: graft.llm.LMClient,
-      outCol: String, mkReq: org.apache.spark.sql.Row => graft.llm.LMRequest,
-      stats: graft.llm.UsageStats, cached: Boolean): DataFrame = {
-    val outSchema = org.apache.spark.sql.types.StructType(df.schema.fields :+
-      org.apache.spark.sql.types.StructField(outCol,
-        org.apache.spark.sql.types.StringType, nullable = true))
-    val batch = lm.maxBatchSize
-    df.mapPartitions { iter =>
-      iter.grouped(batch).flatMap { rows =>
-        val reqs = rows.map(mkReq)
-        val results = lm.complete(reqs)
-        stats.record(reqs, results)
-        if (!cached) stats.recordPhysical(reqs.length.toLong)
-        rows.lazyZip(results).map { (r, res) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ res.output)
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
   /** sem_map over a stream: continuous LLM transformation of arriving rows
     * (beyond-reference — the reference is batch-only). Composes with
-    * watermarks, windows, and any writeStream sink.
+    * watermarks, windows, and any writeStream sink. The stage is the batch
+    * operators' metered `mapPartitions` body
+    * ([[graft.operators.LLMStage.answerPartitions]]) without what streaming
+    * forbids: no partition probing and no checkpoint.
     */
-  def semMapStream(df: DataFrame, instr: String, suffix: String = "_map"): DataFrame = {
-    val s = graft.core.Sem.settings
-    val nle = graft.core.NLExpr.parse(instr)
-    nle.validate(df.columns.toIndexedSeq)
-    val ser = graft.operators.SemCore.serializeDocBudgeted(
-      df.schema, nle.cols, s.serializationFormat, s.lm, s.longContextStrategy)
-    val stats = graft.llm.UsageTracker.forSession(df.sparkSession)
-    graft.llm.UsageLimit.checkBeforeStage(stats, s.lm)
-    val lm = s.activeLm(stats)
-    val instruction = nle.instruction
-    val out = appendAnswerStream(df, lm, "__graft_raw",
-      row => graft.llm.LMRequest(graft.llm.Prompts.mapFormatter(ser(row), instruction)),
-      stats, lm.isInstanceOf[graft.llm.CachedLM])
-    out.withColumn(suffix, col("__graft_raw")).drop("__graft_raw")
-  }
+  def semMapStream(df: DataFrame, instr: String, suffix: String = "_map"): DataFrame =
+    answerStream(df, instr, graft.llm.Prompts.mapFormatter(_, _))
+      .withColumn(suffix, col("__graft_raw")).drop("__graft_raw")
 
   /** sem_filter over a stream: keeps rows the model affirms. */
-  def semFilterStream(df: DataFrame, instr: String, default: Boolean = true): DataFrame = {
+  def semFilterStream(df: DataFrame, instr: String, default: Boolean = true): DataFrame =
+    answerStream(df, instr, graft.llm.Prompts.filterFormatter(_, _))
+      .filter(graft.operators.SemCore.boolExpr(graft.operators.SemCore.answerExprFor(
+        graft.core.Sem.settings.lm.modelName, col("__graft_raw")), default))
+      .drop("__graft_raw")
+
+  /** Append the raw answer to `format(doc, instruction)` as `__graft_raw`. */
+  private def answerStream(df: DataFrame, instr: String,
+      format: (String, String) => Seq[graft.llm.ChatMessage]): DataFrame = {
     val s = graft.core.Sem.settings
     val nle = graft.core.NLExpr.parse(instr)
     nle.validate(df.columns.toIndexedSeq)
     val ser = graft.operators.SemCore.serializeDocBudgeted(
       df.schema, nle.cols, s.serializationFormat, s.lm, s.longContextStrategy)
-    val stats = graft.llm.UsageTracker.forSession(df.sparkSession)
-    graft.llm.UsageLimit.checkBeforeStage(stats, s.lm)
-    val lm = s.activeLm(stats)
     val instruction = nle.instruction
-    val out = appendAnswerStream(df, lm, "__graft_raw",
-      row => graft.llm.LMRequest(graft.llm.Prompts.filterFormatter(ser(row), instruction)),
-      stats, lm.isInstanceOf[graft.llm.CachedLM])
-    out.filter(graft.operators.SemCore.boolExpr(
-        graft.operators.SemCore.answerExprFor(lm.modelName, col("__graft_raw")), default))
-      .drop("__graft_raw")
+    graft.operators.LLMStage.answerPartitions(df, s.lm, "__graft_raw", None,
+      row => graft.llm.LMRequest(format(ser(row), instruction)))
   }
 
   /** Approximate Bloom size (bytes) for `n` insertions at `fpp` — the

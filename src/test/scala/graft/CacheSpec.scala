@@ -16,6 +16,20 @@ final case class CountingLM(tag: String = "c1") extends LMClient {
     batch.map(_ => LMResult(s"v${CountingLM.counter.incrementAndGet()}"))
 }
 
+/** Counts every request that reaches the wrapped model. */
+object SeenLM {
+  val requests = new java.util.concurrent.atomic.AtomicLong(0)
+}
+final case class SeenLM(inner: LMClient) extends LMClient {
+  override def maxBatchSize: Int = inner.maxBatchSize
+  override def maxCtxLen: Int = inner.maxCtxLen
+  override def modelName: String = inner.modelName
+  override def complete(batch: Seq[LMRequest]): Seq[LMResult] = {
+    SeenLM.requests.addAndGet(batch.length.toLong)
+    inner.complete(batch)
+  }
+}
+
 class CacheSpec extends SparkSpec {
   import spark.implicits._
 
@@ -107,5 +121,97 @@ class CacheSpec extends SparkSpec {
     assert(math.abs(Pricing.costUsd("gpt-4o-mini", 1000000, 0) - 0.15) < 1e-9)
     val (in, out) = Pricing.priceFor("totally-unknown-model")
     assert((in, out) == Pricing.defaultPrice)
+  }
+
+  // ---- metering parity: every LM path is counted by the one client ----
+
+  private val topkDocs = (0 until 14).map(i => (i.toLong, s"t$i", (i * 7 % 23).toLong))
+  private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Runs `run` with the cache off, then twice with it on (a cold and a
+    * warm pass), checking the usage deltas against the requests `SeenLM`
+    * saw: off, every request is physical; on, physical + hits = requests.
+    */
+  private def assertMeteringParity(s: graft.core.SemSettings)(run: => Unit): Unit = {
+    val stats = freshStats()
+    def deltas(cache: Boolean): (Long, Long, Long, Long) = {
+      val before = (stats.requests.value, stats.physicalRequests.value,
+        stats.cacheHits.value, SeenLM.requests.get())
+      Sem.withSettings(s.copy(enableCache = cache))(run)
+      (stats.requests.value - before._1, stats.physicalRequests.value - before._2,
+        stats.cacheHits.value - before._3, SeenLM.requests.get() - before._4)
+    }
+    val (req, phys, hits, seen) = deltas(cache = false)
+    assert(req > 0, "the path must issue LM requests")
+    assert(req == phys && phys == seen && hits == 0,
+      s"cache off: requests=$req physical=$phys hits=$hits seen=$seen")
+    ResponseCache.clear()
+    Seq(deltas(cache = true), deltas(cache = true)).foreach { case (req, phys, hits, seen) =>
+      assert(phys + hits == req && phys == seen,
+        s"cache on: requests=$req physical=$phys hits=$hits seen=$seen")
+    }
+  }
+
+  private def fake(b: FakeBehavior, batch: Int = 4, ctx: Int = 128000): LMClient =
+    SeenLM(FakeLM(b, maxBatchSize = batch, maxCtxLen = ctx))
+
+  test("metering parity: semMap") {
+    val df = (0 until 10).map(i => (i.toLong, s"item $i here")).toDF("id", "text")
+    assertMeteringParity(Sem.settings.copy(lm = fake(FakeBehavior.FirstWords("Text", 2)))) {
+      df.semMap("lead words of {text}").collect()
+    }
+  }
+
+  test("metering parity: semFilterCascade") {
+    val df = (0 until 30).map(i => (i.toLong,
+      if (i % 3 == 0) s"flight $i had a delay" else s"flight $i on time")).toDF("id", "text")
+    val helper = fake(FakeBehavior.KeywordFilterProb("delay"))
+    assertMeteringParity(Sem.settings.copy(lm = fake(FakeBehavior.KeywordFilter("delay")))) {
+      df.semFilterCascade("the {text} mentions a delay", helperLm = helper).collect()
+    }
+  }
+
+  for ((label, threshold) <- Seq("driverFoldThreshold = 0" -> Some("0"), "default" -> None))
+    test(s"metering parity: semAgg, $label") {
+      val df = (0 until 24).map(i => (i.toLong, s"doc-$i word " * (i % 4 + 1)))
+        .toDF("id", "text")
+      threshold.foreach(spark.conf.set("graft.semAgg.driverFoldThreshold", _))
+      try assertMeteringParity(Sem.settings.copy(
+          lm = fake(FakeBehavior.ConcatDocs("\n"), ctx = 600))) {
+        df.semAgg("summarize {text}", orderBy = Seq(col("id"))).collect()
+      }
+      finally spark.conf.unset("graft.semAgg.driverFoldThreshold")
+    }
+
+  for (method <- Seq("quick", "heap", "naive"))
+    test(s"metering parity: semTopK $method") {
+      val df = topkDocs.toDF("doc_id", "text", "n_chars").repartition(3)
+      assertMeteringParity(Sem.settings.copy(lm = fake(FakeBehavior.PreferLonger()))) {
+        df.semTopK("{text} {n_chars} {doc_id}", k = 3, method = method).collect()
+      }
+    }
+
+  test("metering parity: semTopK quick with a comparison cascade") {
+    val df = topkDocs.toDF("doc_id", "text", "n_chars")
+    assertMeteringParity(Sem.settings.copy(lm = fake(FakeBehavior.PreferLonger()),
+        helperLm = Some(fake(FakeBehavior.PreferLongerProb())))) {
+      df.semTopK("{text} {n_chars} {doc_id}", k = 3, cascadeThreshold = Some(0.9)).collect()
+    }
+  }
+
+  test("metering parity: semMapStream") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    assertMeteringParity(Sem.settings.copy(lm = fake(FakeBehavior.FirstWords("Text", 2)))) {
+      val input = MemoryStream[(Long, String)]
+      val q = graft.streaming.StreamingOps
+        .semMapStream(input.toDF().toDF("id", "text"), "lead words of {text}")
+        .writeStream.outputMode("append").format("memory")
+        .queryName(s"metered_stream_${streamSeq.incrementAndGet()}").start()
+      try {
+        input.addData((0 until 9).map(i => (i.toLong, s"streamed item $i")): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
   }
 }

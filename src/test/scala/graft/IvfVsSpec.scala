@@ -175,4 +175,26 @@ class IvfVsSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException](IvfVS(base, nProbe = -1))
   }
+
+  test("nProbe = 0 re-reads a sidecar rewritten under the same mtime when its length differs") {
+    val base = java.nio.file.Files.createTempDirectory("ivfvs_stamp").toString
+    val auto = IvfVS(base, nCells = 8, nProbe = 0, seed = 7,
+      targetRecall = 1.0, autoRecallK = 10)
+    Sem.withSettings(Sem.settings.copy(vs = Some(auto))) {
+      EmbedOps.semIndexSave(vecs, "emb", "id", "coll")
+      val qv = vecs.filter($"id" === 3).select(EmbedOps.vecCol("emb"))
+        .as[Seq[Float]].head()
+      // k = every vector: the row count shows how many cells were probed.
+      def hits() = EmbedOps.semSearchStoreVec(spark, "coll", qv, 120).count()
+      assert(hits() < 120, "the measured tier must be partial on this geometry")
+      // An external rewrite to the full tier that keeps the old mtime
+      // (a write within the filesystem's timestamp granularity).
+      val sidecar = java.nio.file.Paths.get(base, "coll", "autoprobe.json")
+      val mtime = java.nio.file.Files.getLastModifiedTime(sidecar)
+      graft.core.MetaIo.write(spark, sidecar.toString,
+        """{"nProbe":8,"recall":1.0,"note":"rewritten to the full tier"}""")
+      java.nio.file.Files.setLastModifiedTime(sidecar, mtime)
+      assert(hits() == 120, "the rewritten decision must be read, not the cached one")
+    }
+  }
 }
