@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tools.Dev
 
 /** Benchmark main: every SparkEntry query timed on SPARK_GRAFT_SF_DIR, one
   * JSON line on stdout. Contention defense (a recorded round-4 run was 2-3×
@@ -19,9 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  private[graft] def loadAvgNow(): Double = loadAvg()
-
-  private def loadAvg(): Double =
+  private[graft] def loadAvg(): Double =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.split("\\s+")(0).toDouble finally src.close()
@@ -73,10 +72,8 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val passTotals = scala.collection.mutable.ArrayBuffer.fill(passes)(0.0)
     for (pass <- 1 to passes; (name, fn) <- names) {
-      val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val (_, dt) = Dev.time(fn(spark, sfDir).count())
         timings(name) = timings(name) :+ dt
         passTotals(pass - 1) += dt
       } catch {
@@ -85,26 +82,7 @@ object Bench {
             errors(name) = Option(e.getMessage).getOrElse(e.toString)
               .linesIterator.take(3).mkString(" ").take(500)
       }
-      // Per-query isolation, OUTSIDE the timing window: operators stage
-      // frames via localCheckpoint and (by design — see Persist's
-      // Tracked-variant contract) leave them pinned for the caller's
-      // lifetime. Across passes × queries those blocks accumulate until
-      // late-alphabet queries measure storage-memory pressure instead of
-      // their own plan (a ×30 scale run showed the 9th query 7× slower
-      // in-sequence than in isolation, on identical code and data).
-      // BLOCKING: a non-blocking unpersist leaves the previous query's
-      // localCheckpoint blocks draining asynchronously while the next
-      // query is already being timed — measured as the r12
-      // dedup_minhash_auto bimodality (stable 2.1-2.6 s estimator when
-      // run alone, 2.5-11 s interleaved with a sibling gate; the
-      // estimator's ~80 MB broadcast + staged state contended with the
-      // sibling's still-resident blocks). The wait is outside the timing
-      // window, so it costs wall-clock only, never a measurement.
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-      } catch { case _: Exception => () }
+      Dev.isolate(spark)
     }
     def ms(v: Double): Double = math.round(v * 1000).toDouble / 1000
     val results = names.map { case (name, _) =>
@@ -113,57 +91,21 @@ object Bench {
     Outcome(results, errors.toSeq, passTotals.toSeq.map(ms))
   }
 
-  /** Compact SUMMARY line — every scalar of the full record, WITHOUT the
-    * per-query/error maps. The full line for 228 queries is ~9 KB and a
-    * consumer capturing only the last ~2 KB of stdout truncates it mid-map
-    * (both r14 and r15 driver captures parsed to null, leaving two rounds
-    * with no per-query ground truth); this line is < 300 bytes and printed
-    * LAST, so any tail window holds a complete, parseable record. Per-query
-    * detail lives in `BENCH_LAST.json` / `BENCH_HISTORY.jsonl`.
+  /** The scalars both records carry, rendered once: the `"metric"` …
+    * `"unit"` head and the `"n_errors"` … `"pass_totals"` tail. `value`
+    * sums only non-erroring queries (an error contributes no fake time);
+    * `n_errors` makes a red run visible to a consumer that reads nothing
+    * else.
     */
-  private[graft] def renderSummaryJson(o: Outcome, sfDir: String, passes: Int,
-      loadBefore: Double, loadAfter: Double): String = {
+  private def scalarParts(o: Outcome, sfDir: String, passes: Int,
+      loadBefore: Double, loadAfter: Double): (String, String) = {
     val good = o.timings.collect { case (_, v) if v >= 0 => v }
     val total = math.round(good.sum * 1000).toDouble / 1000
     val passPart =
       if (o.passTotals.isEmpty) ""
       else s""","pass_totals":${o.passTotals.mkString("[", ",", "]")}"""
-    val cores = Runtime.getRuntime.availableProcessors()
-    val contended =
-      if (loadBefore > math.max(1.0, 0.04 * cores)) ""","contended":true"""
-      else ""
-    s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${o.timings.size},"n_errors":${o.errors.size},"sf":"$sfDir","passes":$passes,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter$contended$passPart,"queries_file":"BENCH_LAST.json"}"""
-  }
-
-  /** One-line JSON record. `value` sums only non-erroring queries (an error
-    * contributes no fake time); `n_errors` makes a red run visible to a
-    * consumer that reads nothing else.
-    */
-  private[graft] def renderJson(o: Outcome, sfDir: String, passes: Int,
-      loadBefore: Double, loadAfter: Double,
-      diag: Map[String, Long] = Map.empty,
-      diagLists: Map[String, Seq[Long]] = Map.empty): String = {
-    val qs = o.timings.map { case (k, v) => graft.core.Jsons.str(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val errs = o.errors.map { case (k, v) =>
-      graft.core.Jsons.str(k) + ":" + graft.core.Jsons.str(v)
-    }.mkString("{", ",", "}")
-    val good = o.timings.collect { case (_, v) if v >= 0 => v }
-    val total = math.round(good.sum * 1000).toDouble / 1000
-    val passPart =
-      if (o.passTotals.isEmpty) ""
-      else s""","pass_totals":${o.passTotals.mkString("[", ",", "]")}"""
-    val diagPart = {
-      val scalars = diag.toSeq.sortBy(_._1)
-        .map { case (k, v) => graft.core.Jsons.str(k) + ":" + v }
-      val lists = diagLists.toSeq.sortBy(_._1).filter(_._2.nonEmpty)
-        .map { case (k, vs) =>
-          graft.core.Jsons.str(k) + ":" + vs.mkString("[", ",", "]") }
-      val all = scalars ++ lists
-      if (all.isEmpty) "" else all.mkString(",", ",", "")
-    }
     // A capture that STARTED on a busy machine is a different workload
-    // than a quiet one (r13's driver capture at loadavg 4.19 read
+    // than a quiet one (r13's recorded capture at loadavg 4.19 read
     // 1.2–3× over the quiet canonical on identical code): the record
     // says so itself, so any consumer — including one that reads only
     // this line — can discount it without cross-referencing history.
@@ -175,25 +117,54 @@ object Bench {
     val contended =
       if (loadBefore > math.max(1.0, 0.04 * cores)) ""","contended":true"""
       else ""
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_errors":${o.errors.size},"sf":"$sfDir","passes":$passes,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter$contended$passPart$diagPart}"""
+    (s"""{"metric":"total","value":$total,"unit":"sec",""",
+      s""""n_errors":${o.errors.size},"sf":"$sfDir","passes":$passes,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter$contended$passPart""")
+  }
+
+  /** Compact SUMMARY line — every scalar of the full record, WITHOUT the
+    * per-query/error maps. The full line for 228 queries is ~9 KB and a
+    * consumer capturing only the last ~2 KB of stdout truncates it mid-map
+    * (both the r14 and r15 captures parsed to null, leaving two rounds
+    * with no per-query ground truth); this line is < 300 bytes and printed
+    * LAST, so any tail window holds a complete, parseable record. Per-query
+    * detail lives in `BENCH_LAST.json` / `BENCH_HISTORY.jsonl`.
+    */
+  private[graft] def renderSummaryJson(o: Outcome, sfDir: String, passes: Int,
+      loadBefore: Double, loadAfter: Double): String = {
+    val (head, tail) = scalarParts(o, sfDir, passes, loadBefore, loadAfter)
+    s"""$head"n_queries":${o.timings.size},$tail,"queries_file":"BENCH_LAST.json"}"""
+  }
+
+  /** One-line JSON record: the shared scalars plus the per-query timings,
+    * the error messages and the run's diagnostics.
+    */
+  private[graft] def renderJson(o: Outcome, sfDir: String, passes: Int,
+      loadBefore: Double, loadAfter: Double,
+      diag: Map[String, Long] = Map.empty,
+      diagLists: Map[String, Seq[Long]] = Map.empty): String = {
+    val qs = o.timings.map { case (k, v) => graft.core.Jsons.str(k) + ":" + v }
+      .mkString("{", ",", "}")
+    val errs = o.errors.map { case (k, v) =>
+      graft.core.Jsons.str(k) + ":" + graft.core.Jsons.str(v)
+    }.mkString("{", ",", "}")
+    val diagPart = {
+      val scalars = diag.toSeq.sortBy(_._1)
+        .map { case (k, v) => graft.core.Jsons.str(k) + ":" + v }
+      val lists = diagLists.toSeq.sortBy(_._1).filter(_._2.nonEmpty)
+        .map { case (k, vs) =>
+          graft.core.Jsons.str(k) + ":" + vs.mkString("[", ",", "]") }
+      val all = scalars ++ lists
+      if (all.isEmpty) "" else all.mkString(",", ",", "")
+    }
+    val (head, tail) = scalarParts(o, sfDir, passes, loadBefore, loadAfter)
+    s"""$head"queries":$qs,"errors":$errs,$tail$diagPart}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM/codegen paths so the first measured query isn't charged
-    // for session bootstrap.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val spark = Dev.local(Dev.cpus)
+    Dev.warmUp(spark, sfDir)
     val loadBefore = loadAvg()
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -210,8 +181,8 @@ object Bench {
     // call order across passes) — the estimator/route cost split. DRAINED
     // (poll, not iterate): a second render in the same JVM must report
     // its own run's invocations, not replay this one's.
-    val pickBands = graft.operators.Dedup.drainPickBandsMs()
-    val pickProbes = graft.operators.EmbedOps.drainPickProbesMs()
+    val pickBands = graft.operators.Dedup.pickBandsMs.drain()
+    val pickProbes = graft.operators.EmbedOps.pickProbesMs.drain()
     val loadAfter = loadAvg()
     val json = renderJson(outcome, sfDir, passes, loadBefore, loadAfter, diag,
       Map("pickbands_ms" -> pickBands, "pickprobes_ms" -> pickProbes))
@@ -222,14 +193,13 @@ object Bench {
     println(renderSummaryJson(outcome, sfDir, passes, loadBefore, loadAfter))
     // Self-contained record regardless of the caller's capture window, plus
     // an append-only history so per-round records survive the next run.
-    try {
+    try
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HISTORY.jsonl"),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case _: Exception => () }
+    catch { case e: Exception =>
+      System.err.println(s"[bench] could not write BENCH_LAST.json: $e")
+    }
+    Dev.appendHistory(json)
     spark.stop()
   }
 }

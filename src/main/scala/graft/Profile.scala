@@ -1,36 +1,71 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import graft.tools.Dev
 
-/** Dev tool (guide §1.5): run named SparkEntry queries with a listener that
-  * records every Spark job's wall time, call site and description, then
-  * print the per-job breakdown — the "where do the seconds go" split for
-  * multi-job gates (lifecycle ladders, foreachBatch microbatches) that a
-  * single plan dump cannot show.
+/** Dev tool with three modes:
   *
-  * `runMain graft.Profile <sfDir> <name>[,<name>…] [passes]` — the LAST
-  * pass's jobs are reported (earlier passes warm JIT/code caches the way
-  * the bench's median does).
+  *  - `jobs <sfDir> <name>[,<name>…] [passes]` (guide §1.5) runs named
+  *    SparkEntry queries with a listener that records every Spark job's
+  *    wall time, call site and description, then prints the per-job
+  *    breakdown — the "where do the seconds go" split for multi-job gates
+  *    (lifecycle ladders, foreachBatch microbatches) that a single plan
+  *    dump cannot show. The LAST pass's jobs are reported (earlier passes
+  *    warm JIT/code caches the way the bench's median does).
+  *  - `explain <sfDir> [<name>[,<name>…]]` prints the formatted physical
+  *    plan of named queries — the `.explain` feedback loop for plan
+  *    audits, without writing anything. With no names it dumps a
+  *    representative set whose plans show the scale-critical properties:
+  *    parquet filter/column pushdown, broadcast joins for dims,
+  *    TakeOrderedAndProject for top-k, no stray cartesian products, wide
+  *    WholeStageCodegen spans. A query whose plan cannot be built prints a
+  *    `failed:` line and the rest still print.
+  *  - `entry` runs `SparkEntry.entry` and prints its rows and row count.
+  *
+  * `runMain graft.Profile <mode> …`
   */
 object Profile {
+
+  private val usage =
+    """usage: graft.Profile <mode> ..., mode one of:
+      |  jobs <sfDir> <name>[,<name>...] [passes]
+      |  explain <sfDir> [<name>[,<name>...]]
+      |  entry""".stripMargin
+
+  private def names(csv: String): Seq[String] =
+    csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  private val defaultExplain = Seq("q1_agg", "q2_join_agg", "q3_topn",
+    "q6_filter", "sem_filter_kw", "sem_sim_join_cos", "dedup_minhash",
+    "agg_skew_distinct", "sample_reservoir_key", "split_train_holdout",
+    "corpus_diff_snapshots", "events_asof_nearest", "text_line_stats")
+
+  /** The run `args` ask for, or the usage message when they name no mode,
+    * an unknown one, or a missing or malformed argument.
+    */
+  private[graft] def plan(args: Array[String]): Either[String, SparkSession => Unit] =
+    args.toList match {
+      case "jobs" :: sfDir :: csv :: rest
+          if rest.size <= 1 && rest.forall(_.toIntOption.exists(_ > 0)) =>
+        Right(jobs(_, sfDir, names(csv), rest.headOption.fold(2)(_.toInt)))
+      case "explain" :: sfDir :: rest if rest.size <= 1 =>
+        Right(explain(_, sfDir, rest.headOption.map(names).getOrElse(defaultExplain)))
+      case "entry" :: Nil => Right(entry)
+      case _ => Left(usage)
+    }
+
+  def main(args: Array[String]): Unit = {
+    val run = plan(args).fold(Dev.usage, identity)
+    val spark = Dev.local(Dev.cpus)
+    try run(spark) finally spark.stop()
+  }
 
   private final case class JobRec(id: Int, var desc: String = "",
       var callSite: String = "", var t0: Long = 0L, var t1: Long = 0L,
       var nTasks: Int = 0)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val namesCsv = args(1)
-    val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def jobs(spark: SparkSession, sfDir: String, names: Seq[String],
+      passes: Int): Unit = {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     @volatile var recording = false
     val listener = new SparkListener {
@@ -50,27 +85,19 @@ object Profile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    // Bench-main warmup so pass 1 is not charged session bootstrap.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    namesCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+    Dev.warmUp(spark, sfDir)
+    names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
       var last = 0.0
       for (p <- 1 to passes) {
         if (p == passes) { jobs.clear(); recording = true }
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        last = (System.nanoTime() - t0) / 1e9
+        last = Dev.time(fn(spark, sfDir).count())._2
         // Listener events arrive asynchronously: drain them while still
         // recording, so the pass's last jobs are in the map with their ends.
         org.apache.spark.sql.graft.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
         recording = false
-        try {
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          spark.catalog.clearCache()
-        } catch { case _: Exception => () }
+        Dev.isolate(spark)
       }
       import scala.jdk.CollectionConverters._
       val recs = jobs.values.asScala.toSeq.sortBy(_.id)
@@ -84,6 +111,20 @@ object Profile {
         println(f"job ${r.id}%4d ${ms}%6d ms  gap ${gap}%7.3f s  tasks ${r.nTasks}%4d  ${r.callSite.take(46)}%-46s  ${r.desc.take(80)}")
       }
     }
-    spark.stop()
+  }
+
+  private def explain(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Unit =
+    names.foreach { name =>
+      println(s"==== $name ====")
+      try SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))(spark, sfDir)
+        .explain("formatted")
+      catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+    }
+
+  private def entry(spark: SparkSession): Unit = {
+    val df = SparkEntry.entry(spark)
+    df.show(20, truncate = false)
+    println(s"entry rows=${df.count()}")
   }
 }

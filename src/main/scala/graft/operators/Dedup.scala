@@ -337,6 +337,13 @@ object Dedup {
     rep.find(_._2 >= targetRecall).getOrElse(rep.last)
   }
 
+  /** Wall-millis of each [[pickBands]] run. Bench drains it into its JSON
+    * record so a cross-round read can split "estimator" from "banded
+    * route" cost inside the auto gates — the r12 `dedup_minhash_auto`
+    * 3.5–11 s variance question was unanswerable without the split.
+    */
+  private[graft] val pickBandsMs = new graft.core.TimingRing(1024)
+
   /** The auto route's band-tier picker — the minhash sibling of
     * `EmbedOps.pickCellProbes`: ONE bounded pass answers every tier.
     * Whether a qualifying pair collides in ≥1 band depends only on the
@@ -355,52 +362,12 @@ object Dedup {
     * `targetRecall`, else the highest offered tier with its
     * (insufficient) recall.
     */
-  /** Per-JVM diagnostic trail: wall-millis of each [[pickBands]] run, in
-    * call order, BOUNDED at the newest [[pickBandsMsCap]] entries (a
-    * long-lived service calling auto-band dedup forever must not grow a
-    * queue node per call). Bench DRAINS it (poll) into its JSON record so
-    * a cross-round read can split "estimator" from "banded route" cost
-    * inside the auto gates — the r12 `dedup_minhash_auto` 3.5–11 s
-    * variance question was unanswerable without the split.
-    */
-  private[graft] val pickBandsMs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
-  private[graft] val pickBandsMsCap = 1024
-  // Element count tracked beside the queue: ConcurrentLinkedQueue.size()
-  // is an O(n) traversal and would run per call forever once the queue
-  // fills; the counter makes cap eviction O(1) and atomic-per-slot (add
-  // then conditionally evict keeps the count ≤ cap + #concurrent-callers,
-  // good enough for a diagnostic ring).
-  private val pickBandsMsCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Drain the timing ring (Bench's JSON split of estimator vs route
-    * cost). Centralized so the counter stays in step with the queue.
-    */
-  private[graft] def drainPickBandsMs(): Seq[Long] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var v = pickBandsMs.poll()
-    while (v != null) {
-      pickBandsMsCount.decrementAndGet()
-      out += v.longValue()
-      v = pickBandsMs.poll()
-    }
-    out.toSeq
-  }
-
   private[graft] def pickBands(df: DataFrame, textCol: String, idCol: String,
       threshold: Double, numHashes: Int, tiers: Seq[Int], shingleLen: Int,
       sampleSize: Int, targetRecall: Double,
-      excludeExact: Boolean): (Int, Double) = {
-    val __t0 = System.nanoTime()
-    try pickBandsImpl(df, textCol, idCol, threshold, numHashes, tiers,
-      shingleLen, sampleSize, targetRecall, excludeExact)
-    finally {
-      pickBandsMs.add((System.nanoTime() - __t0) / 1000000L)
-      if (pickBandsMsCount.incrementAndGet() > pickBandsMsCap &&
-          pickBandsMs.poll() != null)
-        pickBandsMsCount.decrementAndGet()
-    }
-  }
+      excludeExact: Boolean): (Int, Double) =
+    pickBandsMs.time(pickBandsImpl(df, textCol, idCol, threshold, numHashes,
+      tiers, shingleLen, sampleSize, targetRecall, excludeExact))
 
   private def pickBandsImpl(df: DataFrame, textCol: String, idCol: String,
       threshold: Double, numHashes: Int, tiers: Seq[Int], shingleLen: Int,

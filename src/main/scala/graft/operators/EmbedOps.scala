@@ -907,6 +907,12 @@ object EmbedOps {
     (star, base, probeAssign(base, centroids, cellProbes), k, nDistinct, dim)
   }
 
+  /** Wall-millis of each [[pickCellProbes]] run — the cells route's
+    * sibling of `Dedup.pickBandsMs`, so a bench record can split
+    * "estimator" from "route" cost inside the auto gates.
+    */
+  private[graft] val pickProbesMs = new graft.core.TimingRing(1024)
+
   /** The auto route's probe-tier picker: a NESTED-probe recall estimator
     * that answers every tier from ONE sample assignment. Probe cell lists
     * are ranked nearest-first and nested (top-p ⊆ top-(p+1)), so assigning
@@ -921,40 +927,11 @@ object EmbedOps {
     * Returns the cheapest tier whose sampled recall meets `targetRecall`,
     * else the highest offered tier with its (insufficient) recall.
     */
-  /** Per-JVM diagnostic trail of [[pickCellProbes]] wall-millis, in call
-    * order, bounded at the newest [[pickProbesMsCap]] entries — the cells
-    * route's sibling of `Dedup.pickBandsMs`, so a bench record can split
-    * "estimator" from "route" cost inside the auto gates.
-    */
-  private[graft] val pickProbesMs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
-  private[graft] val pickProbesMsCap = 1024
-  private val pickProbesMsCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def drainPickProbesMs(): Seq[Long] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var v = pickProbesMs.poll()
-    while (v != null) {
-      pickProbesMsCount.decrementAndGet()
-      out += v.longValue()
-      v = pickProbesMs.poll()
-    }
-    out.toSeq
-  }
-
   private def pickCellProbes(base: DataFrame, centroids: Array[Array[Float]],
       nDistinct: Long, threshold: Double, targetRecall: Double,
-      tiers: Seq[Int], sampleSize: Int, seed: Long): (Int, Double) = {
-    val __t0 = System.nanoTime()
-    try pickCellProbesImpl(base, centroids, nDistinct, threshold,
-      targetRecall, tiers, sampleSize, seed)
-    finally {
-      pickProbesMs.add((System.nanoTime() - __t0) / 1000000L)
-      if (pickProbesMsCount.incrementAndGet() > pickProbesMsCap &&
-          pickProbesMs.poll() != null)
-        pickProbesMsCount.decrementAndGet()
-    }
-  }
+      tiers: Seq[Int], sampleSize: Int, seed: Long): (Int, Double) =
+    pickProbesMs.time(pickCellProbesImpl(base, centroids, nDistinct,
+      threshold, targetRecall, tiers, sampleSize, seed))
 
   private def pickCellProbesImpl(base: DataFrame, centroids: Array[Array[Float]],
       nDistinct: Long, threshold: Double, targetRecall: Double,

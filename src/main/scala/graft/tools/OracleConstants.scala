@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the pinned oracle constants in `Queries.scala` (fitted
   * centroids / PQ codebooks at sf0.01). The fits sort their samples, so
   * every constant is a pure function of the testdata vector multiset — this
@@ -13,12 +11,10 @@ import org.apache.spark.sql.SparkSession
 object OracleConstants {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-oracle-constants")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Dev.local(Dev.cpus)
+    // The BPE inventory lists its pieces in collect order, which follows
+    // the shuffle layout: the pinned literal was generated at 32 partitions.
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
       val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
         .select("embedding").collect().map(_.getSeq[Float](0).toArray)

@@ -41,6 +41,23 @@ class BenchVerifySpec extends SparkSpec {
     assert(!bare.contains("pickbands"), bare)
   }
 
+  test("every scalar of the summary line is in the full record with the " +
+      "same value") {
+    val o = Bench.Outcome(Seq("a" -> 1.25, "b" -> -1.0), Seq("b" -> "boom"),
+      passTotals = Seq(1.25, 1.5))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // Bench.main hands n_queries to the full record through its diag map.
+    val full = mapper.readTree(Bench.renderJson(o, "sf", 2, 9.5, 2.0,
+      diag = Map("n_queries" -> 2L, "gc_ms" -> 7L),
+      diagLists = Map("pickbands_ms" -> Seq(3L))))
+    val summary = mapper.readTree(
+      Bench.renderSummaryJson(o, "sf", 2, 9.5, 2.0))
+    import scala.jdk.CollectionConverters._
+    val keys = summary.fieldNames.asScala.toSeq.filterNot(_ == "queries_file")
+    assert(keys.contains("contended") && keys.contains("pass_totals"), keys)
+    keys.foreach(k => assert(full.get(k) == summary.get(k), k))
+  }
+
   test("Bench errors on a partial failure too (throws in one pass only)") {
     var calls = 0
     val flaky: (org.apache.spark.sql.SparkSession, String) =>
