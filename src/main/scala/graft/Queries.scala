@@ -4894,6 +4894,8 @@ object Queries {
       // clean-rebuild truth, so refresh ≡ rebuild without re-indexing
       // the unchanged bulk. Snapshot 2 is pure arithmetic: %10==1 removed,
       // %10==2 text-suffixed, suffixed copies of %10==3 added at +100000.
+      // The save fixes 16 buckets; the compaction re-derives the count from
+      // the data, so the append and search run on that count.
       val tmp = java.nio.file.Files.createTempDirectory("graft_verify_bm25ref").toString
       val d = read(s, dir, "documents").select("doc_id", "text")
       val changed = d.filter(col("doc_id") % 10 === 2)
@@ -4952,8 +4954,9 @@ object Queries {
     }),
 
     "bm25_append" -> ((s, dir) => {
-      // Incremental sparse index growth: save on even doc_ids, APPEND the
-      // odd ones (same hash buckets via the stats sidecar, dynamic-
+      // Incremental sparse index growth: save on even doc_ids into a fixed
+      // 16 buckets (the default would size the count from the data), APPEND
+      // the odd ones (same hash buckets via the stats sidecar, dynamic-
       // partition postings append, n/Σdl updated), search the grown index.
       // Integer-valued stats make the updated totals exactly the fresh
       // build's, so the same full-corpus oracle hash-verifies the append.

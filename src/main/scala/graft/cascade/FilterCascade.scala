@@ -69,16 +69,22 @@ private[cascade] object CascadeCore {
       args: CascadeArgs, default: Boolean,
       keepCols: Seq[String]): (DataFrame, CascadeStats) = {
     val (tauPos, tauNeg) = learnThresholds(scored, mkReq, oracleLm, args, default)
-    val accepted = scored.filter(col("__pc") >= tauPos)
-    val rejected = scored.filter(col("__pc") <= tauNeg && col("__pc") < tauPos)
-    val middle = scored.filter(col("__pc") < tauPos && col("__pc") > tauNeg)
+    val isAccepted = col("__pc") >= tauPos
+    val isRejected = col("__pc") <= tauNeg && col("__pc") < tauPos
+    val isMiddle = col("__pc") < tauPos && col("__pc") > tauNeg
+    val accepted = scored.filter(isAccepted)
+    val middle = scored.filter(isMiddle)
     val oracleResolved = LLMStage.appendAnswer(middle, oracleLm, "__oracle_raw", mkReq)
       .filter(SemCore.boolExpr(SemCore.answerExprFor(oracleLm.modelName, col("__oracle_raw")), default))
       .drop("__oracle_raw")
     val cols = keepCols.map(col)
     val result = accepted.select(cols: _*).union(oracleResolved.select(cols: _*))
-    val stats = CascadeStats(scored.count(), accepted.count(), rejected.count(),
-      middle.count(), tauPos, tauNeg)
+    // One job for all four counts; a null `__pc` fails every predicate, so
+    // it is counted in the total only, as the filters above drop it.
+    val counts = scored.agg(count(lit(1)), count(when(isAccepted, 1)),
+      count(when(isRejected, 1)), count(when(isMiddle, 1))).head()
+    val stats = CascadeStats(counts.getLong(0), counts.getLong(1),
+      counts.getLong(2), counts.getLong(3), tauPos, tauNeg)
     (result, stats)
   }
 }

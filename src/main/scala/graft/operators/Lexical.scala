@@ -46,7 +46,7 @@ object Lexical {
     log(lit(1.0) + (n - df + lit(0.5)) / (df + lit(0.5)))
 
   /** One term's BM25 contribution given tf, doc length and corpus stats. */
-  private def termScore(tf: Column, dl: Column, n: Column, sumDl: Column,
+  private[operators] def termScore(tf: Column, dl: Column, n: Column, sumDl: Column,
       df: Column, k1: Double, b: Double): Column = {
     val avgdl = sumDl / n
     idf(n, df) * tf * lit(k1 + 1.0) /
@@ -154,13 +154,46 @@ object Lexical {
   * layout as the saved IVF index (`IvfIndex.save`), applied to sparse
   * retrieval. At 100 TB a query touches nTerms/nBuckets of the postings,
   * not the corpus.
+  *
+  * The bucket count comes from the data unless the caller fixes it: one
+  * bucket per 16 MB of estimated input, at most 64
+  * (`graft.core.Parallelism.directories`). A small index is one directory,
+  * so its appends write a few files and its reads start no parallel
+  * listing job; an index estimated above 64 × 16 MB keeps the full
+  * 64-directory layout and its pruning.
   */
 object LexIndex {
 
   val bucketCol = "__term_bucket"
 
+  /** The cap of the data-sized bucket count. */
+  private val maxBuckets = 64
+
   private def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(xxhash64(term), lit(nBuckets.toLong)).cast("int")
+
+  /** The buckets `terms` hash to — `bucketOf`'s xxhash64 (seed 42) computed
+    * on the driver, so no job runs just to learn which partitions to prune.
+    */
+  private def bucketsOf(terms: Seq[String], nBuckets: Int): Seq[Int] =
+    terms.map { t =>
+      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+        org.apache.spark.unsafe.types.UTF8String.fromString(t),
+        org.apache.spark.sql.types.StringType, 42L)
+      math.floorMod(h, nBuckets.toLong).toInt
+    }.distinct
+
+  /** The saved postings, refusing the pre-denormalization layout loudly:
+    * dl-less posting files would surface null doc lengths and silently zero
+    * old docs' score contributions (an append beside them, or a search).
+    */
+  private def readPostings(spark: SparkSession, path: String,
+      what: String): DataFrame = {
+    val post = graft.core.BatchCommit.readData(spark, path, "postings")
+    require(post.columns.contains("dl"),
+      s"$what: $path uses the legacy postings layout (no dl column) — rebuild with save()")
+    post
+  }
 
   /** Build postings `(term, id, tf, dl, bucket)` — one explode + one groupBy
     * (term, id): the canonical index-build shuffle, paid once per corpus.
@@ -170,7 +203,7 @@ object LexIndex {
     * whole query-time IO.
     */
   def postings(df: DataFrame, textCol: String, idCol: String,
-      nBuckets: Int = 64): DataFrame =
+      nBuckets: Int): DataFrame =
     postingsFromPerDoc(perDocFrame(df, textCol, idCol), nBuckets)
 
   /** `(id, dl, __toks)` per document — tokenize once: size and explode both
@@ -245,8 +278,28 @@ object LexIndex {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Overwrite `dest` with bucket-partitioned `post`. More than
+    * [[fewBuckets]] buckets shuffle by bucket, one file per directory. Up
+    * to that many, each of the input's tasks writes its own file per
+    * bucket: a shuffle by so few bucket ids leaves most cores idle, or
+    * puts every row in one task when the ids hash together. On 4 cores,
+    * compacting a 21 MB index into 2 buckets took 4.3–5.0 s with the
+    * shuffle and 3.1–3.4 s without it (3.4–3.6 s into 16 buckets).
+    */
+  private def writeBuckets(post: DataFrame, nBuckets: Int, dest: String): Unit =
+    (if (nBuckets > fewBuckets) post.repartition(col(bucketCol)) else post)
+      .write.mode("overwrite").partitionBy(bucketCol).parquet(dest)
+
+  private val fewBuckets = 4
+
   /** Write the index: bucket-partitioned postings (doc length denormalized
     * in), stats JSON (`{"n":…,"sumdl":…,"nBuckets":…}` — driver-side, tiny).
+    *
+    * `nBuckets` 0 (the default) sizes the bucket count from `df`'s plan
+    * estimate: `ceil(estimate / 16 MB)`, clamped to `[1, 64]`; a positive
+    * value is kept as given. [[append]], [[search]] and [[describe]] follow
+    * the count the sidecar records. An explicit count does not survive
+    * [[compactDeletes]], which re-derives it from the postings.
     *
     * The corpus stats (n, Σdl, empty docs) are observed INSIDE the postings
     * write via `Dataset.observe` on the per-document frame (above the
@@ -259,7 +312,11 @@ object LexIndex {
     * silently wrong.
     */
   def save(df: DataFrame, textCol: String, idCol: String, path: String,
-      nBuckets: Int = 64): Unit = {
+      nBuckets: Int = 0): Unit = {
+    require(nBuckets >= 0, s"LexIndex.save: nBuckets $nBuckets must be >= 0")
+    val buckets =
+      if (nBuckets > 0) nBuckets
+      else graft.core.Parallelism.directories(df, maxBuckets, s"LexIndex.save($path) buckets")
     val obs = org.apache.spark.sql.Observation("lex_save_stats")
     val perDoc = perDocFrame(df, textCol, idCol)
       .observe(obs,
@@ -267,10 +324,8 @@ object LexIndex {
         coalesce(sum(col("dl")), lit(0.0)).as("sumdl"),
         coalesce(sum(when(col("dl") === 0, 1).otherwise(0)).cast("double"),
           lit(0.0)).as("nEmpty"))
-    postingsFromPerDoc(perDoc, nBuckets)
-      .repartition(col(bucketCol))
-      .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(path + "/postings")
+    writeBuckets(postingsFromPerDoc(perDoc, buckets), buckets,
+      path + "/postings")
     // obs.get blocks until the write's QueryExecution event delivers the
     // metrics — guard with a timeout so a Spark version that stopped
     // surfacing observed metrics for V1 writes degrades to the fallback
@@ -299,7 +354,7 @@ object LexIndex {
             "the stats sidecar (the save just paid tokenize twice)")
         docStats(df, textCol, idCol)
       }
-    writeStats(path, n, sumdl, nBuckets, nEmpty)
+    writeStats(path, n, sumdl, buckets, nEmpty)
     // A rebuild supersedes any interrupted append — clear its dangling mark.
     graft.core.BatchCommit.clearMark(df.sparkSession, path)
   }
@@ -326,13 +381,7 @@ object LexIndex {
     val statsPath = java.nio.file.Paths.get(path, "stats.json")
     require(java.nio.file.Files.exists(statsPath),
       s"LexIndex.append: no index at $path (missing stats.json)")
-    // Refuse the pre-denormalization layout loudly: appending dl-bearing
-    // posting files next to dl-less ones would surface null doc lengths and
-    // silently zero old docs' score contributions.
-    val existing = graft.core.BatchCommit.readData(spark, path, "postings")
-      .schema.fieldNames.toSet
-    require(existing.contains("dl"),
-      s"LexIndex.append: $path uses the legacy postings layout (no dl column) — rebuild with save()")
+    readPostings(spark, path, "LexIndex.append")
     val (_, _, nBuckets, _) = readStats(path)
     // The preflight job also sums the batch's stats delta (Σdl, empty docs).
     val pre = graft.core.BatchCommit.preflight(docLengths(df, textCol, idCol),
@@ -382,15 +431,24 @@ object LexIndex {
     * documents (which have no postings and can never match a query) drop
     * out of n; document-count consumers of stats.json should prefer the
     * corpus over a compacted index.
+    *
+    * The bucket count is re-derived by [[save]]'s rule (capped at 64), not
+    * copied from `src`, so an explicit count given to [[save]] is dropped:
+    * an index that grew by appends re-buckets here, and one that shrank
+    * merges its directories. The estimate is of the surviving postings,
+    * not of the documents [[save]] sized from, and postings run larger, so
+    * a compaction may pick more buckets than the save did even when
+    * nothing was deleted.
     */
   def compactDeletes(spark: SparkSession, src: String, dest: String): Unit = {
     require(src != dest, "LexIndex.compactDeletes: dest must differ from src (no in-place rewrite)")
     graft.core.BatchCommit.requireClean(spark, src, "LexIndex")
-    val (_, _, nBuckets, _) = readStats(src)
     val post = graft.core.BatchCommit.subtractTombstones(spark, src,
       graft.core.BatchCommit.readData(spark, src, "postings"))
-    post.repartition(col(bucketCol))
-      .write.mode("overwrite").partitionBy(bucketCol).parquet(s"$dest/postings")
+    val nBuckets = graft.core.Parallelism.directories(post, maxBuckets,
+      s"LexIndex.compactDeletes($dest) buckets")
+    writeBuckets(post.withColumn(bucketCol, bucketOf(col("term"), nBuckets)),
+      nBuckets, s"$dest/postings")
     val r = post.groupBy("id").agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).cast("double"), sum(col("dl")).cast("double")).head()
     // Zero-token docs have no postings, so they drop out of the recomputed
@@ -423,44 +481,42 @@ object LexIndex {
       n - nEmpty - r.getLong(1))
   }
 
-  /** Search a saved index. Reads: stats.json (driver, bytes) and the
-    * postings partitions of the query terms' buckets (pruned scan) — nothing
-    * else; doc lengths ride inside the posting rows and document frequencies
-    * come from the pruned postings themselves, so query cost is independent
-    * of corpus size. Returns `(id, scoreCol)` top-k.
+  /** The saved postings of `terms`, each row carrying its BM25 contribution
+    * `__s` — the one scoring path of [[search]] and [[searchBatch]]. Reads
+    * stats.json (driver, bytes) and the postings partitions of the terms'
+    * buckets (pruned scan) — nothing else; doc lengths ride inside the
+    * posting rows and document frequencies come from the pruned postings
+    * themselves, so query cost is independent of corpus size.
+    */
+  private def scoredPostings(spark: SparkSession, path: String,
+      terms: Seq[String], k1: Double, b: Double, what: String): DataFrame = {
+    // An interrupted append means the stats may be stale by its batch and
+    // the postings may hold a partial batch — scores would silently drift.
+    graft.core.BatchCommit.requireClean(spark, path, "LexIndex")
+    val (n, sumdl, nBuckets, _) = readStats(path)
+    // Deleted docs' postings are subtracted ABOVE the pruned scan, so they
+    // can never score; per-term df below is therefore survivor-fresh, while
+    // (n, avgdl) stay stale until compactDeletes — the Lucene contract.
+    val post = graft.core.BatchCommit.subtractTombstones(spark, path,
+      readPostings(spark, path, what)
+        .filter(col(bucketCol).isin(bucketsOf(terms, nBuckets): _*) &&
+          col("term").isin(terms: _*)))
+    val dfs = post.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+    // lit(sumdl) / lit(n) folds to the constant avgdl.
+    post.join(broadcast(dfs), "term")
+      .withColumn("__s", Lexical.termScore(col("tf"), col("dl"), lit(n),
+        lit(sumdl), col("df"), k1, b))
+  }
+
+  /** Search a saved index ([[scoredPostings]]). Returns `(id, scoreCol)`
+    * top-k.
     */
   def search(spark: SparkSession, path: String, query: String, k: Int,
       scoreCol: String = "bm25", k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val terms = Lexical.queryTerms(query)
     require(terms.nonEmpty, "LexIndex.search: query has no terms")
-    // An interrupted append means the stats may be stale by its batch and
-    // the postings may hold a partial batch — scores would silently drift.
-    graft.core.BatchCommit.requireClean(spark, path, "LexIndex")
-    val (n, sumdl, nBuckets, _) = readStats(path)
-    // Same hash as bucketOf's xxhash64 expression (seed 42), computed on the
-    // driver — no job just to learn which partitions to prune.
-    val bucketLits = terms.map { t =>
-      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(t),
-        org.apache.spark.sql.types.StringType, 42L)
-      math.floorMod(h, nBuckets.toLong).toInt
-    }.distinct
-    // Deleted docs' postings are subtracted ABOVE the pruned scan, so they
-    // can never score; per-term df below is therefore survivor-fresh, while
-    // (n, avgdl) stay stale until compactDeletes — the Lucene contract.
-    val post = graft.core.BatchCommit.subtractTombstones(spark, path,
-      graft.core.BatchCommit.readData(spark, path, "postings")
-        .filter(col(bucketCol).isin(bucketLits: _*) && col("term").isin(terms: _*)))
-    require(post.columns.contains("dl"),
-      s"LexIndex.search: $path uses the legacy postings layout (no dl column) — rebuild with save()")
-    val dfs = post.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val avgdl = sumdl / n
-    val perPost = post.join(broadcast(dfs), "term")
-      .withColumn("__s",
-        log(lit(1.0) + (lit(n) - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          col("tf") * lit(k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / lit(avgdl))))
-    perPost.groupBy("id").agg(sum(col("__s")).as(scoreCol))
+    scoredPostings(spark, path, terms, k1, b, "LexIndex.search")
+      .groupBy("id").agg(sum(col("__s")).as(scoreCol))
       .orderBy(col(scoreCol).desc, col("id"))
       .limit(k)
   }
@@ -483,32 +539,12 @@ object LexIndex {
     termsByQ.foreach { case (qid, ts) =>
       require(ts.nonEmpty, s"LexIndex.searchBatch: query $qid has no terms")
     }
-    graft.core.BatchCommit.requireClean(spark, path, "LexIndex")
-    val (n, sumdl, nBuckets, _) = readStats(path)
     val allTerms = termsByQ.flatMap(_._2).distinct
-    val bucketLits = allTerms.map { t =>
-      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(t),
-        org.apache.spark.sql.types.StringType, 42L)
-      math.floorMod(h, nBuckets.toLong).toInt
-    }.distinct
-    val post = graft.core.BatchCommit.subtractTombstones(spark, path,
-      graft.core.BatchCommit.readData(spark, path, "postings")
-        .filter(col(bucketCol).isin(bucketLits: _*) &&
-          col("term").isin(allTerms: _*)))
-    require(post.columns.contains("dl"),
-      s"LexIndex.searchBatch: $path uses the legacy postings layout (no dl column) — rebuild with save()")
-    val dfs = post.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val avgdl = sumdl / n
     import spark.implicits._
     val qt = termsByQ.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
       .toDF("__qid", "term")
-    val perPost = post.join(broadcast(dfs), "term")
-      .join(broadcast(qt), "term")
-      .withColumn("__s",
-        log(lit(1.0) + (lit(n) - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          col("tf") * lit(k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / lit(avgdl))))
+    val perPost = scoredPostings(spark, path, allTerms, k1, b,
+      "LexIndex.searchBatch").join(broadcast(qt), "term")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col(scoreCol).desc, col("id"))
     perPost.groupBy(col("__qid").as("qid"), col("id"))

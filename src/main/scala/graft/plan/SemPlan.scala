@@ -1,6 +1,8 @@
 package graft.plan
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft._
@@ -42,10 +44,22 @@ final case class SemPlan(ops: Seq[SemOp]) {
     case _                            => Nil
   }
 
+  /** The lowercased name parts of the columns `condition` references, as
+    * Spark's parser reads them (backticks resolved); None when it does not
+    * parse. Lowercased because Spark resolves names case-insensitively by
+    * default.
+    */
+  private def references(condition: String): Option[Set[String]] =
+    scala.util.Try(CatalystSqlParser.parseExpression(condition)).toOption.map {
+      _.collect { case a: UnresolvedAttribute => a.nameParts }.flatten
+        .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    }
+
   /** Predicate pushdown: bubble classical filters before consecutive
     * semantic stages — an LLM call costs ~10^6× a codegen'd predicate, so
     * every row dropped early is the single biggest cost lever. Safe unless
-    * the predicate references a column the semantic stage produces.
+    * the predicate references a column the semantic stage produces; a
+    * condition that does not parse stays where it is.
     */
   def optimized: SemPlan = {
     val arr = ops.toBuffer
@@ -58,9 +72,8 @@ final case class SemPlan(ops: Seq[SemOp]) {
           // may reference right columns, so never push one below a join.
           case (prev, cf: ClassicalFilter)
               if !prev.isInstanceOf[ClassicalFilter] && !prev.isInstanceOf[SemJoinOp] =>
-            val produced = produces(prev)
-            val refs = cf.condition.split("[^A-Za-z0-9_`]+").toSet
-            if (!produced.exists(refs.contains)) {
+            val produced = produces(prev).map(_.toLowerCase(java.util.Locale.ROOT))
+            if (references(cf.condition).exists(refs => !produced.exists(refs.contains))) {
               arr(i) = arr(i - 1)
               arr(i - 1) = cf
               changed = true

@@ -27,6 +27,32 @@ class PlanConnectorsSpec extends SparkSpec {
     assert(p.optimized.ops == p.ops) // cannot move past its producer
   }
 
+  test("pushdown keeps a backtick-quoted reference above its producer") {
+    val p = SemPlan(Seq(
+      SemMapOp("summarize {text}", suffix = "_map"),
+      ClassicalFilter("`_map` = 'True'")))
+    assert(p.optimized.ops == p.ops)
+    val docs = Seq("a long text").toDF("text")
+    val out = Sem.withLM(FakeLM(FakeBehavior.Scripted(Seq("True")))) {
+      p.optimized.run(docs).collect()
+    }
+    assert(out.length == 1)
+  }
+
+  test("pushdown matches references case-insensitively, as Spark resolves them") {
+    val p = SemPlan(Seq(
+      SemMapOp("summarize {text}", suffix = "_map"),
+      ClassicalFilter("_MAP IS NOT NULL")))
+    assert(p.optimized.ops == p.ops)
+  }
+
+  test("pushdown leaves a filter whose condition does not parse in place") {
+    val p = SemPlan(Seq(
+      SemFilterOp("the {text} is about sports"),
+      ClassicalFilter("n_chars >")))
+    assert(p.optimized.ops == p.ops)
+  }
+
   test("plan round-trips through JSON and runs") {
     val p = SemPlan(Seq(
       ClassicalFilter("id < 3"),
