@@ -74,8 +74,12 @@ object Profile {
         r.t0 = js.time
         r.desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        // Most jobs carry no callSite.short property; the name Spark gives
+        // the job's last (result) stage is its call site.
         r.callSite = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+          .getOrElse("")
         r.nTasks = js.stageInfos.map(_.numTasks).sum
         jobs.put(js.jobId, r)
       }

@@ -3966,16 +3966,17 @@ object Queries {
     "ppl_bigram" -> ((s, dir) => {
       // LM-perplexity scoring (the CCNet stage the lang-id and dedup
       // gates bracket: KenLM perplexity against an in-domain LM): an
-      // interpolated bigram LM is fitted on this corpus — minCount = 2
+      // interpolated order-2 LM is fitted on this corpus — minCount = 2
       // folds the hapax words into <unk>, so the OOV path is LIVE — and
       // every doc scores Σ ln(λ·pml(cur|prev) + (1−λ)·p_uni(cur)) left
       // to right from BOS, ppl = exp(−ll/n). The oracle refits from
-      // scratch in DuckDB with the same float-op shapes (including
-      // (1 − 0.7), NOT the 0.3 literal — IEEE 1−0.7 ≠ 0.3), so round-4
-      // ll AND ppl hash-match.
+      // scratch in DuckDB keyed by the bigram STRINGS (the engine's gram
+      // hash is internal; the counts are identical) with the same
+      // float-op shapes (including (1 − 0.7), NOT the 0.3 literal — IEEE
+      // 1−0.7 ≠ 0.3), so round-4 ll AND ppl hash-match.
       val d = read(s, dir, "documents")
-      val m = graft.operators.NgramLm.fitBigramLM(
-        d, "text", minCount = 2L)
+      val m = graft.operators.NgramLm.fitNgramLM(
+        d, "text", order = 2, minCount = 2L)
       graft.operators.NgramLm.perplexity(d, "text", m)
         .select(col("doc_id"), col("lm_tokens"),
           round(col("lm_ll"), 4).as("lm_ll"),
@@ -3986,16 +3987,16 @@ object Queries {
     "ppl_trigram" -> ((s, dir) => {
       // One order closer to CCNet's 5-gram KenLM: the two-level
       // Jelinek–Mercer trigram LM (λ₂ on the trigram ML term, the
-      // bigram+unigram interpolation as its backoff), fitted with ONE
-      // extra bounded aggregate over packed 21-bit-id keys and scored in
-      // one compiled pass. The oracle refits unigram, bigram, AND
+      // bigram+unigram interpolation as its backoff), fitted with one
+      // bounded aggregate of hashed gram keys for both orders and scored
+      // in one compiled pass. The oracle refits unigram, bigram, AND
       // trigram tables from scratch in DuckDB and replays the per-token
       // dyadic float tree verbatim (literal (1 − λ) forms, ML divisions
       // at score time over the same integer counts), so ll and ppl
       // hash-match at round 4.
       val d = read(s, dir, "documents")
-      val m = graft.operators.NgramLm.fitTrigramLM(
-        d, "text", minCount = 2L)
+      val m = graft.operators.NgramLm.fitNgramLM(
+        d, "text", order = 3, minCount = 2L)
       graft.operators.NgramLm.perplexity(d, "text", m)
         .select(col("doc_id"), col("lm_tokens"),
           round(col("lm_ll"), 4).as("lm_ll"),
@@ -4005,9 +4006,9 @@ object Queries {
 
     "ppl_5gram" -> ((s, dir) => {
       // CCNet's published order, reached: a 5-gram Jelinek–Mercer LM
-      // over HASHED gram keys (the 21-bit packing caps packed keys at
-      // order 3; KenLM's probing tables key grams by hash the same
-      // way), fitted with one bounded distinct-key aggregate per order
+      // over HASHED gram keys (KenLM's probing tables key grams by hash
+      // the same way), the ppl_bigram and ppl_trigram model at order 5,
+      // fitted with one bounded distinct-key aggregate for all orders
       // whose context totals come from the same aggregate, scored as
       // one compiled per-row fold. The oracle refits all four gram
       // tables from scratch in DuckDB keyed by the gram STRINGS — the
@@ -4019,7 +4020,7 @@ object Queries {
       val m = graft.operators.NgramLm.fitNgramLM(
         d, "text", order = 5, minCount = 2L)
       // Stage the scored frame BEFORE the multi-column projection: the
-      // score is a struct-returning CodegenFallback kernel, and through
+      // score is a struct-returning kernel, and through
       // collapsed projections every field reference re-runs the whole
       // order-5 fold (4 hashed-table lookups per token) — the
       // ccnet_pipeline discipline, measured 2-3× on this gate.
@@ -4443,7 +4444,8 @@ object Queries {
         .filter(col("lang_pred") === col("lang") &&
           col("lang_margin") >= 2.0)
         .select(d.columns.map(col): _*)
-      val lm = graft.operators.NgramLm.fitBigramLM(s2, "text", minCount = 2L)
+      val lm = graft.operators.NgramLm.fitNgramLM(
+        s2, "text", order = 2, minCount = 2L)
       val scored = graft.core.Persist.stage(
         graft.operators.NgramLm.perplexity(s2, "text", lm))
       // Keep the below-mean-perplexity half — CCNet's "head" cut with a
@@ -4467,7 +4469,8 @@ object Queries {
       // percent-rank (never a corpus-wide window) and the 1/3, 2/3
       // cuts. Low perplexity = head.
       val d = read(s, dir, "documents")
-      val lm = graft.operators.NgramLm.fitBigramLM(d, "text", minCount = 2L)
+      val lm = graft.operators.NgramLm.fitNgramLM(
+        d, "text", order = 2, minCount = 2L)
       // Staged before filter/round/rank — through collapsed projections
       // every struct-field reference re-runs the scoring fold (the
       // ccnet_pipeline discipline; measured 15x on the order-5 sibling).
@@ -4493,7 +4496,8 @@ object Queries {
       // closer to the published 5-gram KenLM stage, same bounded
       // grouped percent-rank, never a corpus-wide window.
       val d = read(s, dir, "documents")
-      val lm = graft.operators.NgramLm.fitTrigramLM(d, "text", minCount = 2L)
+      val lm = graft.operators.NgramLm.fitNgramLM(
+        d, "text", order = 3, minCount = 2L)
       // Staged before filter/round/rank — through collapsed projections
       // every struct-field reference re-runs the scoring fold (the
       // ccnet_pipeline discipline; measured 15x on the order-5 sibling).

@@ -96,10 +96,7 @@ object IvfIndex {
     // partition): membership is a pure function of (vector, seed), so the
     // same corpus yields the same fit sample — and hence identical
     // centroids — no matter how it is partitioned. Reproducible rebuilds.
-    val fitDf = if (frac >= 1.0) indexed.select(col(v))
-                else indexed.select(col(v)).filter(
-                  pmod(xxhash64(col(v), lit(seed)), lit(1000000L)) <
-                    math.round(frac * 1000000.0))
+    val fitDf = graft.core.TierChoice.sample(indexed.select(col(v)), v, frac, seed)
     val sample = fitDf.collect().map(_.getSeq[Float](0).toArray)
     val centroids = fitCentroids(sample, nCells, seed, maxIter)
     val out = indexed.withColumn(cellCol,
@@ -488,10 +485,7 @@ object IvfIndex {
     val n = if (knownRows >= 0) knownRows else df.count()
     if (n == 0) return 0.0
     val frac = math.min(1.0, sampleTarget.toDouble / n)
-    val sampled =
-      if (frac >= 1.0) df
-      else df.filter(pmod(xxhash64(col(v), lit(seed)), lit(1000000L)) <
-        math.round(frac * 1000000.0))
+    val sampled = graft.core.TierChoice.sample(df, v, frac, seed)
     val r = sampled.agg(avg(
       graft.functions.VectorExprs.nearestCentroidDist(col(v), centroids))).head()
     if (r.isNullAt(0)) 0.0 else r.getDouble(0)

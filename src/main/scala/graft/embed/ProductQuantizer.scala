@@ -79,10 +79,7 @@ object ProductQuantizer {
       // Content-hash sampling (the IvfIndex.build convention): membership is
       // a pure function of (vector, seed), so the codebooks really are a pure
       // function of the vector multiset even on the sampled path.
-      val fitDf = if (frac >= 1.0) indexed.select(col(v))
-                  else indexed.select(col(v)).filter(
-                    pmod(xxhash64(col(v), lit(seed)), lit(1000000L)) <
-                      math.round(frac * 1000000.0))
+      val fitDf = graft.core.TierChoice.sample(indexed.select(col(v)), v, frac, seed)
       val sample = fitDf.collect().map(_.getSeq[Float](0).toArray)
       require(sample.nonEmpty, "PQ fit sample is empty")
       val dim = sample.head.length

@@ -9,7 +9,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Tight-loop token-fold kernels for the trained-classifier family
-  * ([[graft.operators.QualityClassifier]]). The composable form —
+  * ([[graft.operators.QualityClassifier]]) and the n-gram LM
+  * ([[graft.operators.NgramLm]]). The composable form —
   * `aggregate(tokens, 0.0, (acc, w) => acc + element_at(mapLit, w))` —
   * hides two per-TOKEN costs that dominate a corpus pass: Spark's
   * `GetMapValue` on a literal map is a LINEAR scan of the entries (a 5k-
@@ -22,9 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * IDENTICAL left-to-right IEEE addition order — the DuckDB oracles that
   * replay `list_reduce(list_transform(...)) + prior` stay hash-matched.
   * The fit-side kernels stay CodegenFallback (one pass per fit — the
-  * boundary cost never repeats); the three LM SCORERS implement doGenCode
-  * so the hot scoring projection calls the compiled kernel from generated
-  * code with no interpreted-expression boundary at all.
+  * boundary cost never repeats); the LM scorer [[NgramHashLmScore]]
+  * implements doGenCode so the hot scoring projection calls the compiled
+  * kernel from generated code with no interpreted-expression boundary at
+  * all.
   */
 object LookupExprs {
 
@@ -56,8 +58,8 @@ object LookupExprs {
     private val vals = new Array[Double](cap)
     private val live = new Array[Boolean](cap)
     entries.foreach { case (k, v) =>
-      // mix64: packed-id keys (prev·2³²+cur) are far from uniform — raw
-      // low bits would cluster linear probes into long runs.
+      // mix64: a caller's keys need not be uniform — clustered low bits
+      // would run linear probes into long chains.
       var i = mix64(k).toInt & mask
       while (live(i) && keys(i) != k) i = (i + 1) & mask
       keys(i) = k; vals(i) = v; live(i) = true
@@ -77,11 +79,10 @@ object LookupExprs {
       new LongDoubleHash(m.iterator, m.size)
   }
 
-  /** Broadcast-shared scoring model for the LM kernels
-    * ([[BigramLmScore]] / [[TrigramLmScore]] / [[NgramHashLmScore]]): the
-    * fitted vocab (pre-hashed UTF8 keys), unigram probabilities, and one
-    * primitive probe table per order, built ONCE on the driver and
-    * reached through a broadcast handle. As plan literals the tables
+  /** Broadcast-shared scoring model for the LM kernel
+    * ([[NgramHashLmScore]]): the fitted vocab (pre-hashed UTF8 keys),
+    * unigram probabilities, and one primitive probe table per order,
+    * built ONCE on the driver and reached through a broadcast handle. As plan literals the tables
     * rode the task binary (16 MB at sf0.1 for the order-5 model) and
     * were deserialized — and their probe structures rebuilt — per TASK;
     * through the broadcast they are deserialized once per executor and,
@@ -304,221 +305,6 @@ object LookupExprs {
       copy(child = newChild)
   }
 
-  /** Per-row bigram-key COUNTS over the vocab-mapped token stream — the
-    * training-side extraction for [[graft.operators.NgramLm]], one
-    * compiled pass (the [[CharNgramCounts]] convention). Each token maps
-    * to its vocab id (missing → `unkId`); the row contributes one count
-    * per position for the key `prev · 2³² + cur`, with `prev = bosId` at
-    * position 0 — so the exploded aggregate input is per-row DISTINCT
-    * bigram keys, and the downstream sum of counts is the exact bigram
-    * multiset of the BOS-prefixed stream. Ids are < 2³¹, so the packed
-    * long is non-negative and `key >> 32` recovers `prev` exactly.
-    */
-  case class BigramKeyCounts(child: Expression, vocab: Map[String, Int],
-      unkId: Int, bosId: Int)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType =
-      MapType(LongType, LongType, valueContainsNull = false)
-    override def checkInputDataTypes() =
-      requireStringArray(child, "bigram_key_counts")
-    @transient private lazy val h = utf8Map(vocab)
-    override protected def nullSafeEval(input: Any): Any = {
-      val toks = input.asInstanceOf[ArrayData]
-      val n = toks.numElements()
-      val counts = new java.util.LinkedHashMap[java.lang.Long, Long]()
-      var prev = bosId
-      var i = 0
-      while (i < n) {
-        val t = toks.getUTF8String(i)
-        val v = if (t == null) null else h.get(t)
-        val cur = if (v == null) unkId else v.asInstanceOf[Int]
-        val key = java.lang.Long.valueOf((prev.toLong << 32) | cur.toLong)
-        val c = counts.get(key)
-        counts.put(key, if (c == null) 1L else c + 1L)
-        prev = cur
-        i += 1
-      }
-      val k = new Array[Any](counts.size)
-      val v = new Array[Any](counts.size)
-      val it = counts.entrySet().iterator()
-      var j = 0
-      while (it.hasNext) {
-        val e = it.next()
-        k(j) = e.getKey.longValue(); v(j) = e.getValue; j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-        new GenericArrayData(k), new GenericArrayData(v))
-    }
-    override protected def withNewChildInternal(newChild: Expression) =
-      copy(child = newChild)
-  }
-
-  /** The whole interpolated-bigram-LM document score in one pass
-    * ([[graft.operators.NgramLm.logLik]]): per token,
-    * `p = λ·pml(cur|prev) + (1−λ)·p_uni(cur)` (`pml` from the bigram
-    * table, missing → 0; ids via the vocab hash, missing → unk), the
-    * log-likelihood accumulates `ln p` LEFT-TO-RIGHT with `prev = bos`
-    * at position 0 — the float-op shape a SQL oracle replays position by
-    * position. Returns struct(ll = Σ ln p, n = token count); an empty
-    * array is (0.0, 0). λ ∈ (0, 1) and α > 0 keep the argument of ln
-    * strictly positive even for an unseen bigram.
-    */
-  case class BigramLmScore(child: Expression,
-      bundle: org.apache.spark.broadcast.Broadcast[LmScoreBundle],
-      lambda: Double, bosId: Int)
-      extends UnaryExpression {
-    require(lambda > 0 && lambda < 1,
-      s"bigram_lm_score: lambda $lambda must be in (0, 1) — at 1 an " +
-        "unseen bigram in scored text makes ln's argument 0")
-    override def dataType: DataType = StructType(Seq(
-      StructField("ll", DoubleType, nullable = false),
-      StructField("n", IntegerType, nullable = false)))
-    override def checkInputDataTypes() =
-      requireStringArray(child, "bigram_lm_score")
-    @transient private lazy val b = bundle.value
-    // Generated code calls the compiled kernel directly on the child's
-    // ArrayData — no interpreted-expression boundary, no InternalRow
-    // round-trip per row (the former CodegenFallback shape).
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bigramLmScore", this, classOf[BigramLmScore].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.score($c);")
-    }
-    def score(toks: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
-      val n = toks.numElements()
-      val h = b.vocab
-      val bg = b.tables(0)
-      val uniProb = b.uniProb
-      val unkId = b.unkId
-      var ll = 0.0
-      var prev = bosId
-      var i = 0
-      while (i < n) {
-        val t = toks.getUTF8String(i)
-        val v = if (t == null) null else h.get(t)
-        val cur = if (v == null) unkId else v.intValue()
-        val pml = bg.getOrElse((prev.toLong << 32) | cur.toLong, 0.0)
-        ll += math.log(lambda * pml + (1.0 - lambda) * uniProb(cur))
-        prev = cur
-        i += 1
-      }
-      org.apache.spark.sql.catalyst.InternalRow(ll, n)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      score(input.asInstanceOf[ArrayData])
-    override protected def withNewChildInternal(newChild: Expression) =
-      copy(child = newChild)
-  }
-
-  /** Per-row trigram-key COUNTS over the vocab-mapped token stream — the
-    * [[BigramKeyCounts]] convention one order up, for
-    * [[graft.operators.NgramLm.fitTrigramLM]]. The context starts
-    * (BOS, BOS) and slides left-to-right, so position 0 contributes
-    * (BOS, BOS, w₀), position 1 (BOS, w₀, w₁), and every position has
-    * exactly one context — context totals therefore normalize the ML
-    * term exactly. Keys pack `u·2⁴² + v·2²¹ + w` (all ids < 2²¹,
-    * enforced by the fitter), so `key >> 21` recovers the context id
-    * `u·2²¹ + v` with one shift.
-    */
-  case class TrigramKeyCounts(child: Expression, vocab: Map[String, Int],
-      unkId: Int, bosId: Int)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType =
-      MapType(LongType, LongType, valueContainsNull = false)
-    override def checkInputDataTypes() =
-      requireStringArray(child, "trigram_key_counts")
-    @transient private lazy val h = utf8Map(vocab)
-    override protected def nullSafeEval(input: Any): Any = {
-      val toks = input.asInstanceOf[ArrayData]
-      val n = toks.numElements()
-      val counts = new java.util.LinkedHashMap[java.lang.Long, Long]()
-      var u = bosId.toLong
-      var v = bosId.toLong
-      var i = 0
-      while (i < n) {
-        val t = toks.getUTF8String(i)
-        val hit = if (t == null) null else h.get(t)
-        val cur = if (hit == null) unkId.toLong else hit.asInstanceOf[Int].toLong
-        val key = java.lang.Long.valueOf((u << 42) | (v << 21) | cur)
-        val c = counts.get(key)
-        counts.put(key, if (c == null) 1L else c + 1L)
-        u = v
-        v = cur
-        i += 1
-      }
-      val k = new Array[Any](counts.size)
-      val vv = new Array[Any](counts.size)
-      val it = counts.entrySet().iterator()
-      var j = 0
-      while (it.hasNext) {
-        val e = it.next()
-        k(j) = e.getKey.longValue(); vv(j) = e.getValue; j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-        new GenericArrayData(k), new GenericArrayData(vv))
-    }
-    override protected def withNewChildInternal(newChild: Expression) =
-      copy(child = newChild)
-  }
-
-  /** The interpolated-TRIGRAM-LM document score in one pass — two-level
-    * Jelinek–Mercer: per token,
-    * `p = λ₂·pml₃(w|u,v) + (1−λ₂)·(λ₁·pml₂(w|v) + (1−λ₁)·p_uni(w))`,
-    * each ML term 0 when its n-gram is absent, ln p accumulated
-    * LEFT-TO-RIGHT from the (BOS, BOS) context — dyadic float ops in a
-    * fixed order a SQL oracle replays verbatim. `bigramPml` here packs
-    * `v·2²¹ + w` (NOT [[BigramLmScore]]'s 2³² packing — one id width
-    * across both tables). Returns struct(ll, n); empty array = (0.0, 0).
-    */
-  case class TrigramLmScore(child: Expression,
-      bundle: org.apache.spark.broadcast.Broadcast[LmScoreBundle],
-      lambda1: Double, lambda2: Double, bosId: Int)
-      extends UnaryExpression {
-    require(lambda1 > 0 && lambda1 < 1 && lambda2 > 0 && lambda2 < 1,
-      s"trigram_lm_score: lambda1 $lambda1 and lambda2 $lambda2 must " +
-        "both be in (0, 1) so ln's argument stays positive even when " +
-        "both ML terms are unseen")
-    override def dataType: DataType = StructType(Seq(
-      StructField("ll", DoubleType, nullable = false),
-      StructField("n", IntegerType, nullable = false)))
-    override def checkInputDataTypes() =
-      requireStringArray(child, "trigram_lm_score")
-    @transient private lazy val b = bundle.value
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("trigramLmScore", this, classOf[TrigramLmScore].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.score($c);")
-    }
-    def score(toks: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
-      val n = toks.numElements()
-      val h = b.vocab
-      val bg = b.tables(0)
-      val tg = b.tables(1)
-      val uniProb = b.uniProb
-      val unkId = b.unkId
-      var ll = 0.0
-      var u = bosId.toLong
-      var v = bosId.toLong
-      var i = 0
-      while (i < n) {
-        val t = toks.getUTF8String(i)
-        val hit = if (t == null) null else h.get(t)
-        val cur = if (hit == null) unkId.toLong else hit.longValue()
-        val pml2 = bg.getOrElse((v << 21) | cur, 0.0)
-        val pml3 = tg.getOrElse((u << 42) | (v << 21) | cur, 0.0)
-        ll += math.log(lambda2 * pml3 +
-          (1.0 - lambda2) * (lambda1 * pml2 +
-            (1.0 - lambda1) * uniProb(cur.toInt)))
-        u = v
-        v = cur
-        i += 1
-      }
-      org.apache.spark.sql.catalyst.InternalRow(ll, n)
-    }
-    override protected def nullSafeEval(input: Any): Any =
-      score(input.asInstanceOf[ArrayData])
-    override protected def withNewChildInternal(newChild: Expression) =
-      copy(child = newChild)
-  }
-
   /** splitmix64 finalizer — the bijective avalanche step both hashed-key
     * LM kernels share. Bijectivity means `mix64(h ^ id)` chains lose no
     * entropy per step.
@@ -551,20 +337,21 @@ object LookupExprs {
   }
 
   /** Per-row hashed n-gram key counts for ALL orders 2..`order` over the
-    * vocab-mapped token stream — [[BigramKeyCounts]]/[[TrigramKeyCounts]]
-    * generalized past the 21-bit packing limit (3 × 21 = 63 bits caps
-    * packed keys at order 3; CCNet's published filter is a 5-gram KenLM).
-    * Each position's window is the BOS-padded last `order` ids ending at
-    * the current token; for every k in 2..order the row emits one entry
-    * per DISTINCT (k, full-gram hash) with its context hash (the
-    * window's (k−1)-suffix-before-cur) and count. Emitting every order
+    * vocab-mapped token stream — the training-side extraction for
+    * [[graft.operators.NgramLm]], one compiled pass (the
+    * [[CharNgramCounts]] convention). Keys are [[gramHash]]es, so one
+    * kernel serves every order (CCNet's published filter is a 5-gram
+    * KenLM). Each position's window is the BOS-padded last `order` ids
+    * ending at the current token; for every k in 2..order the row emits
+    * one entry per DISTINCT (k, full-gram hash) with its context hash
+    * (the window's (k−1)-suffix-before-cur) and count. Emitting every order
     * from ONE pass means the fitter tokenizes and scans the corpus once
     * and shuffles once, not once per order — at 100 TB that deletes
     * order−2 full corpus scans from the fit. The exploded aggregate
     * input is per-row distinct keys, never the token stream, and
     * context totals group the SAME aggregate by (ord, ctx) (every
     * position has exactly one context per order ⇒ each ML term
-    * normalizes exactly, the [[TrigramKeyCounts]] invariant). Returns
+    * normalizes exactly). Returns
     * array<struct<ord: int, ctx: long, key: long, cnt: long>>.
     */
   case class NgramHashKeyCounts(child: Expression, vocab: Map[String, Int],
@@ -670,8 +457,8 @@ object LookupExprs {
       copy(child = newChild)
   }
 
-  /** The order-n Jelinek–Mercer document score in one pass —
-    * [[TrigramLmScore]] generalized: per token, starting from
+  /** The order-n Jelinek–Mercer document score in one pass
+    * ([[graft.operators.NgramLm.logLik]]): per token, starting from
     * `p = p_uni(w)`, each order k = 2..n wraps
     * `p = λₖ·pmlₖ + (1−λₖ)·p` (each ML term 0 when its hashed gram is
     * absent from that order's table) — the same dyadic float tree a SQL
@@ -743,17 +530,6 @@ object LookupExprs {
   def idLookup(tokens: Column, lut: Map[String, Int], default: Int): Column =
     ColumnBridge.column(IdLookup(ColumnBridge.expression(tokens), lut, default))
 
-  def bigramKeyCounts(tokens: Column, vocab: Map[String, Int],
-      unkId: Int, bosId: Int): Column =
-    ColumnBridge.column(BigramKeyCounts(ColumnBridge.expression(tokens),
-      vocab, unkId, bosId))
-
-  def bigramLmScore(tokens: Column, vocab: Map[String, Int],
-      uniProb: Array[Double], bigramPml: Map[Long, Double],
-      lambda: Double, bosId: Int): Column =
-    ColumnBridge.column(BigramLmScore(ColumnBridge.expression(tokens),
-      broadcastBundle(vocab, uniProb, Seq(bigramPml)), lambda, bosId))
-
   def ngramHashKeyCounts(tokens: Column, vocab: Map[String, Int],
       unkId: Int, bosId: Int, order: Int): Column =
     ColumnBridge.column(NgramHashKeyCounts(ColumnBridge.expression(tokens),
@@ -768,19 +544,6 @@ object LookupExprs {
     ColumnBridge.column(NgramHashLmScore(ColumnBridge.expression(tokens),
       broadcastBundle(vocab, uniProb, tables), lambdas, bosId))
   }
-
-  def trigramKeyCounts(tokens: Column, vocab: Map[String, Int],
-      unkId: Int, bosId: Int): Column =
-    ColumnBridge.column(TrigramKeyCounts(ColumnBridge.expression(tokens),
-      vocab, unkId, bosId))
-
-  def trigramLmScore(tokens: Column, vocab: Map[String, Int],
-      uniProb: Array[Double], bigramPml: Map[Long, Double],
-      trigramPml: Map[Long, Double], lambda1: Double, lambda2: Double,
-      bosId: Int): Column =
-    ColumnBridge.column(TrigramLmScore(ColumnBridge.expression(tokens),
-      broadcastBundle(vocab, uniProb, Seq(bigramPml, trigramPml)),
-      lambda1, lambda2, bosId))
 
   def charNgramCounts(normText: Column, lens: Seq[Int]): Column =
     ColumnBridge.column(

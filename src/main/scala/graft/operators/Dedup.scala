@@ -282,11 +282,7 @@ object Dedup {
         .select(col("id"), col(textCol)))
     val nReps = reps.count()
     val frac = math.min(1.0, sampleSize.toDouble / math.max(1L, nReps))
-    val sampled =
-      if (frac >= 1.0) reps
-      else reps.filter(
-        pmod(xxhash64(col(textCol), lit(101L)), lit(1000000L)) <
-          math.round(frac * 1000000.0))
+    val sampled = graft.core.TierChoice.sample(reps, textCol, frac, 101L)
     // Exact ground truth: hashed-shingle sets for the sampled docs, then
     // all-pairs merge-kernel Jaccard — C(sampleSize, 2) broadcast
     // comparisons, bounded independent of n.
@@ -380,11 +376,7 @@ object Dedup {
     val frac = math.min(1.0, sampleSize.toDouble / math.max(1L, n))
     // Content-hash sample membership (seed matches minhashRecallReport —
     // the certify tool sees the same sample the decision spent).
-    val sampled =
-      if (frac >= 1.0) df
-      else df.filter(
-        pmod(xxhash64(col(textCol), lit(101L)), lit(1000000L)) <
-          math.round(frac * 1000000.0))
+    val sampled = graft.core.TierChoice.sample(df, textCol, frac, 101L)
     // Spread BEFORE staging: the sample inherits the source's layout (one
     // parquet file → ONE partition), and the O(sample²) nested-loop below
     // parallelizes over the STREAMED side's partitions — unspread, the

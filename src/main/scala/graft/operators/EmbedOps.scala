@@ -618,10 +618,7 @@ object EmbedOps {
     // would change with the physical layout. pmod(xxhash64(vec, seed), 1M)
     // is a pure function of the vector multiset — identical centroids at
     // any fraction, no matter how the corpus is partitioned.
-    val fitDf = if (frac >= 1.0) indexed.select(col(v))
-                else indexed.select(col(v)).filter(
-                  pmod(xxhash64(col(v), lit(seed)), lit(1000000L)) <
-                    math.round(frac * 1000000.0))
+    val fitDf = graft.core.TierChoice.sample(indexed.select(col(v)), v, frac, seed)
     val sample = fitDf.collect().map(_.getSeq[Float](0).toArray)
     val centroids = graft.embed.IvfIndex.fitCentroids(sample, nClusters, seed)
     val res = indexed.withColumn(clusterCol,
@@ -882,10 +879,7 @@ object EmbedOps {
     val frac = math.min(1.0,
       math.min(graft.embed.IvfIndex.defaultFitPoints(k), 131072L).toDouble /
         math.max(1L, nDistinct))
-    val fitDf = if (frac >= 1.0) base.select(col("vec"))
-                else base.select(col("vec")).filter(
-                  pmod(xxhash64(col("vec"), lit(seed)), lit(1000000L)) <
-                    math.round(frac * 1000000.0))
+    val fitDf = graft.core.TierChoice.sample(base.select(col("vec")), "vec", frac, seed)
     val centroids = graft.embed.IvfIndex.fitCentroids(
       fitDf.collect().map(_.getSeq[Float](0).toArray), k, seed)
     val dim = if (centroids.isEmpty) 0 else centroids(0).length
@@ -946,10 +940,7 @@ object EmbedOps {
     // projection and the O(sample²) nested loop below parallelize over the
     // streamed side's partitions — unspread they ran on one task.
     val sampled = graft.core.Persist.stage(graft.core.Parallelism.spread(
-      (if (frac >= 1.0) base
-       else base.filter(
-         pmod(xxhash64(col("vec"), lit(seed + 101)), lit(1000000L)) <
-           math.round(frac * 1000000.0)))
+      graft.core.TierChoice.sample(base, "vec", frac, seed + 101)
         .select(col("id"), col("vec"), graft.functions.VectorExprs.probeCells(
           col("vec"), centroids, maxTier).as("pc"))))
     val a = sampled.select(col("id").as("id1"), col("vec").as("v1"),
@@ -1070,10 +1061,7 @@ object EmbedOps {
     // parallelizes over the streamed side's partitions (the pickBands
     // note in Dedup).
     val sampled = graft.core.Persist.stage(graft.core.Parallelism.spread(
-      if (frac >= 1.0) reps
-      else reps.filter(
-        pmod(xxhash64(col(v), lit(seed + 101)), lit(1000000L)) <
-          math.round(frac * 1000000.0))))
+      graft.core.TierChoice.sample(reps, v, frac, seed + 101)))
     val nSample = sampled.count()
     val exact = graft.core.Persist.stage(
       sampled.toDF("id1", "v1")

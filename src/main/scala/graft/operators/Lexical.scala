@@ -292,6 +292,16 @@ object LexIndex {
 
   private val fewBuckets = 4
 
+  /** Give an index with no posting rows its postings schema on disk: a
+    * partitioned write of zero rows leaves no data file, and every later
+    * read of the directory would fail to infer a schema. One empty file in
+    * bucket 0 carries it, so search, describe and append see an empty
+    * index. Runs only when the caller's stats show no postings.
+    */
+  private def writeEmptyPostings(post: DataFrame, dest: String): Unit =
+    post.drop(bucketCol).limit(0).write.mode("overwrite")
+      .parquet(s"$dest/$bucketCol=0")
+
   /** Write the index: bucket-partitioned postings (doc length denormalized
     * in), stats JSON (`{"n":…,"sumdl":…,"nBuckets":…}` — driver-side, tiny).
     *
@@ -354,6 +364,8 @@ object LexIndex {
             "the stats sidecar (the save just paid tokenize twice)")
         docStats(df, textCol, idCol)
       }
+    if (n == nEmpty) writeEmptyPostings(
+      postings(df, textCol, idCol, buckets), path + "/postings")
     writeStats(path, n, sumdl, buckets, nEmpty)
     // A rebuild supersedes any interrupted append — clear its dangling mark.
     graft.core.BatchCommit.clearMark(df.sparkSession, path)
@@ -447,10 +459,11 @@ object LexIndex {
       graft.core.BatchCommit.readData(spark, src, "postings"))
     val nBuckets = graft.core.Parallelism.directories(post, maxBuckets,
       s"LexIndex.compactDeletes($dest) buckets")
-    writeBuckets(post.withColumn(bucketCol, bucketOf(col("term"), nBuckets)),
-      nBuckets, s"$dest/postings")
+    val bucketed = post.withColumn(bucketCol, bucketOf(col("term"), nBuckets))
+    writeBuckets(bucketed, nBuckets, s"$dest/postings")
     val r = post.groupBy("id").agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).cast("double"), sum(col("dl")).cast("double")).head()
+    if (r.getDouble(0) == 0.0) writeEmptyPostings(bucketed, s"$dest/postings")
     // Zero-token docs have no postings, so they drop out of the recomputed
     // n entirely — the compacted sidecar has no empty docs by construction.
     writeStats(dest, r.getDouble(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1),
@@ -502,10 +515,12 @@ object LexIndex {
         .filter(col(bucketCol).isin(bucketsOf(terms, nBuckets): _*) &&
           col("term").isin(terms: _*)))
     val dfs = post.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    // lit(sumdl) / lit(n) folds to the constant avgdl.
+    // lit(sumdl) / lit(n) folds to the constant avgdl. An index of no
+    // documents (n = 0) has no postings to score, but the fold of 0 / 0
+    // would still fail the plan, so it divides by 1 instead.
     post.join(broadcast(dfs), "term")
-      .withColumn("__s", Lexical.termScore(col("tf"), col("dl"), lit(n),
-        lit(sumdl), col("df"), k1, b))
+      .withColumn("__s", Lexical.termScore(col("tf"), col("dl"),
+        lit(math.max(n, 1.0)), lit(sumdl), col("df"), k1, b))
   }
 
   /** Search a saved index ([[scoredPostings]]). Returns `(id, scoreCol)`

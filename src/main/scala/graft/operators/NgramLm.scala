@@ -8,105 +8,46 @@ import org.apache.spark.sql.functions._
   * perplexity filter; the Gopher and LLaMA corpus reports keep the same
   * stage). The reference (lotus-data/lotus) has no LM-perplexity stage —
   * this is a beyond-reference training-data op, kept model-artifact-free
-  * like [[QualityClassifier]]: an interpolated (Jelinek–Mercer) bigram LM
-  * over whitespace tokens, trained entirely in Spark aggregates and
-  * applied as one per-row fold.
+  * like [[QualityClassifier]]: one interpolated (Jelinek–Mercer) order-n
+  * LM over whitespace tokens, trained entirely in Spark aggregates and
+  * applied as one per-row fold. Orders 2 and 3 are the bigram and trigram
+  * models; CCNet's published filter is order 5.
   *
   * Model. Token ids 0..V−1 are the vocabulary (count ≥ `minCount`, the
   * rest fold into `<unk>` = id V; BOS = id V+1 appears only as a left
   * context). Unigram: `p_u(w) = (c(w) + α) / (N + α·(V+1))` over
-  * vocab ∪ {unk}. Per token, `p(w|v) = λ·c(v,w)/c(v·) + (1−λ)·p_u(w)`
-  * where `c(v·)` is v's total continuation count over the BOS-prefixed
-  * stream (so the ML term is exactly normalized); a bigram absent from
-  * the table contributes 0 to the ML term and backs off to the unigram.
-  * Document log-likelihood is the left-to-right sum of `ln p`;
-  * `ppl = exp(−ll/n)`. Dropping bigrams below `minBigramCount` loses
+  * vocab ∪ {unk}. Per token, starting from `p = p_u(w)`, each order
+  * k = 2..n wraps `p = λₖ·cₖ(ctx, w)/cₖ(ctx·) + (1−λₖ)·p`, where
+  * `cₖ(ctx·)` is the context's total continuation count over the
+  * BOS-padded stream (so every ML term is exactly normalized); a gram
+  * absent from its table contributes 0 to its ML term and backs off to
+  * the lower orders. Document log-likelihood is the left-to-right sum of
+  * `ln p`; `ppl = exp(−ll/n)`. Dropping grams below `minNgramCount` loses
   * their ML mass (the model becomes a sub-distribution, scores shift up
   * slightly) — deterministic and engine-reproducible either way, since
-  * `c(v·)` stays the TRUE total.
+  * the context totals stay the TRUE totals.
   *
   * Scale shape: fitting is two shuffles — the unigram (word → count)
-  * aggregate, then the bigram (packed key → count) aggregate whose
-  * per-row extraction is one compiled pass
-  * ([[graft.functions.LookupExprs.BigramKeyCounts]] — per-row DISTINCT
-  * keys enter the exchange, never the token stream). Both collects are
+  * aggregate, then one aggregate of hashed gram keys for every order,
+  * whose per-row extraction is one compiled pass
+  * ([[graft.functions.LookupExprs.NgramHashKeyCounts]] — per-row DISTINCT
+  * keys enter the exchange, never the token stream). Every collect is
   * bounded and the bounds are enforced BEFORE the pull (the
   * [[QualityClassifier.trainNaiveBayes]] convention). Scoring is a pure
-  * per-row expression over plan literals — no UDF, no join, no shuffle:
-  * the property that keeps a perplexity pass one narrow map over 100 TB.
+  * per-row expression over a broadcast model — no UDF, no join, no
+  * shuffle: the property that keeps a perplexity pass one narrow map over
+  * 100 TB.
   */
 object NgramLm {
 
-  /** A fitted n-gram LM that can score a token stream in one compiled
-    * pass. Both orders share the scoring entry points ([[logLik]],
-    * [[perplexity]]) — a CCNet-style pipeline picks its order by passing
-    * the model it fitted ([[fitBigramLM]] or [[fitTrigramLM]]).
-    */
-  sealed trait FittedLM {
-    def vocab: Map[String, Int]
-    def vocabSize: Int = vocab.size
-    def unkId: Int = vocab.size
-    def bosId: Int = vocab.size + 1
-    /** struct(ll, n) column over a token-array column. */
-    private[graft] def scoreColumn(tokens: Column): Column
-  }
-
-  /** A fitted interpolated bigram LM. `vocab` maps token → id ∈ [0, V);
-    * `uniProb` has V+1 entries (unk last); `bigramPml(prev·2³²+cur)` is
-    * the exact ML continuation probability of the kept bigrams; `bosId`
-    * = V+1.
-    */
-  final case class BigramLM(
-      vocab: Map[String, Int],
-      uniProb: Array[Double],
-      bigramPml: Map[Long, Double],
-      lambda: Double,
-      alpha: Double,
-      minCount: Long,
-      minBigramCount: Long,
-      nTokens: Long) extends FittedLM {
-    private[graft] def scoreColumn(tokens: Column): Column =
-      graft.functions.LookupExprs.bigramLmScore(
-        tokens, vocab, uniProb, bigramPml, lambda, bosId)
-  }
-
-  /** A fitted two-level Jelinek–Mercer trigram LM — the same model
-    * family CCNet's 5-gram KenLM stage instantiates (arXiv 1911.00359
-    * §4.3), one order up from [[BigramLM]]: per token,
-    * `p = λ₂·pml₃(w|u,v) + (1−λ₂)·(λ₁·pml₂(w|v) + (1−λ₁)·p_uni(w))`.
-    * `bigramPml` packs `v·2²¹+w` and `trigramPml` `u·2⁴²+v·2²¹+w`
-    * (21-bit ids — the fitter enforces the vocab bound).
-    */
-  final case class TrigramLM(
-      vocab: Map[String, Int],
-      uniProb: Array[Double],
-      bigramPml: Map[Long, Double],
-      trigramPml: Map[Long, Double],
-      lambda1: Double,
-      lambda2: Double,
-      alpha: Double,
-      minCount: Long,
-      minBigramCount: Long,
-      minTrigramCount: Long,
-      nTokens: Long) extends FittedLM {
-    private[graft] def scoreColumn(tokens: Column): Column =
-      graft.functions.LookupExprs.trigramLmScore(
-        tokens, vocab, uniProb, bigramPml, trigramPml, lambda1, lambda2,
-        bosId)
-  }
-
-  /** A fitted order-n Jelinek–Mercer LM over HASHED gram keys — the
-    * packed-id ladder ([[BigramLM]], [[TrigramLM]]) capped at order 3
-    * (3 × 21 = 63 bits); this is the KenLM-style continuation past it
-    * (CCNet's published filter is a 5-gram KenLM, arXiv 1911.00359
-    * §4.3; KenLM's probing tables key grams by hash the same way,
-    * Heafield 2011). `tables(k−2)` maps
-    * [[graft.functions.LookupExprs.gramHash]] of the BOS-padded id
-    * window to order k's exact ML continuation probability; per token,
-    * starting from `p = p_uni(w)`, each order wraps
-    * `p = λₖ·pmlₖ + (1−λₖ)·p`. A 64-bit hash collision merges two
-    * grams' counts (probability ≈ K²/2⁶⁵ — ~10⁻⁷ at gate scale), the
-    * accepted trade of hashed LMs.
+  /** A fitted order-n Jelinek–Mercer LM over HASHED gram keys (KenLM's
+    * probing tables key grams by hash the same way, Heafield 2011).
+    * `vocab` maps token → id ∈ [0, V); `uniProb` has V+1 entries (unk
+    * last); `tables(k−2)` maps [[graft.functions.LookupExprs.gramHash]] of
+    * the BOS-padded id window to order k's exact ML continuation
+    * probability; `lambdas(k−2)` weights it. A 64-bit hash collision
+    * merges two grams' counts (probability ≈ K²/2⁶⁵ — ~10⁻⁷ at gate
+    * scale), the accepted trade of hashed LMs.
     */
   final case class NgramLM(
       vocab: Map[String, Int],
@@ -117,10 +58,8 @@ object NgramLm {
       alpha: Double,
       minCount: Long,
       minNgramCount: Long,
-      nTokens: Long) extends FittedLM {
-    private[graft] def scoreColumn(tokens: Column): Column =
-      graft.functions.LookupExprs.ngramHashLmScore(
-        tokens, vocab, uniProb, tables, lambdas, bosId)
+      nTokens: Long) {
+    def bosId: Int = vocab.size + 1
   }
 
   /** The tokenization every NgramLm entry point shares (the
@@ -178,138 +117,6 @@ object NgramLm {
     (vocab, uniProb, nTokens)
   }
 
-  /** Fit the LM. Two aggregate jobs over the corpus; driver state is the
-    * bounded vocab + kept-bigram table only. Bounds: `maxVocabEntries`
-    * on the post-`minCount` vocabulary and `maxBigramEntries` on the
-    * post-`minBigramCount` bigram table, both probed on the staged
-    * aggregate before any collect — a web-scale table must fail at
-    * aggregate cost, not OOM the driver. The per-prev continuation
-    * totals are ≤ V+2 rows by construction and need no bound.
-    */
-  def fitBigramLM(df: DataFrame, textCol: String, alpha: Double = 1.0,
-      lambda: Double = 0.7, minCount: Long = 1L, minBigramCount: Long = 1L,
-      maxVocabEntries: Int = 1 << 18,
-      maxBigramEntries: Int = 1 << 21): BigramLM = {
-    require(alpha > 0, s"fitBigramLM: alpha $alpha must be > 0")
-    require(lambda > 0 && lambda < 1,
-      s"fitBigramLM: lambda $lambda must be in (0, 1) — at 1 the unigram " +
-        "floor vanishes and an UNSEEN bigram in scored text is ln 0")
-    require(minCount >= 1 && minBigramCount >= 1,
-      s"fitBigramLM: minCount/minBigramCount must be >= 1")
-    val spark = df.sparkSession
-    val (vocab, uniProb, nTokens) =
-      fitUnigram(df, textCol, alpha, minCount, maxVocabEntries)
-    val v = vocab.size
-    // Pass 2: bigram counts over the vocab-mapped, BOS-prefixed stream —
-    // ids assigned BEFORE the exchange, so unk folding is exact and the
-    // key space is bounded by the vocab, not the raw token space.
-    val (aggB, blocksB) = graft.core.Persist.stageTracked(df
-      .select(explode(graft.functions.LookupExprs.bigramKeyCounts(
-        tokensOf(col(textCol)), vocab, v, v + 1)).as(Seq("key", "cnt")))
-      .groupBy("key").agg(sum(col("cnt")).as("n")))
-    val bigramPml = try {
-      // TRUE continuation totals per prev (≤ V+2 rows — collect is safe),
-      // summed over ALL bigram types before the minBigramCount filter.
-      // The kept-table bound rides the SAME aggregate as a per-prev kept
-      // count summed on the driver (≤ V+2 additions) — one job where a
-      // separate count probe ran a second pass over the staged aggregate;
-      // the bound is still proven BEFORE the kept collect below.
-      val prevRows = aggB.groupBy(shiftright(col("key"), 32).as("prev"))
-        .agg(sum(col("n")).as("t"),
-          sum(when(col("n") >= minBigramCount, 1L).otherwise(0L)).as("k"))
-        .collect()
-      val prevTot = prevRows.iterator.map(r => (r.getLong(0), r.getLong(1))).toMap
-      val keptB = aggB.filter(col("n") >= minBigramCount)
-      val bigramSize = prevRows.iterator
-        .map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum
-      require(bigramSize <= maxBigramEntries,
-        s"fitBigramLM: bigram table has > $maxBigramEntries entries " +
-          "(bound) — raise minBigramCount to shrink it, or raise " +
-          "maxBigramEntries deliberately")
-      keptB.collect().map { r =>
-        val key = r.getLong(0)
-        key -> r.getLong(1).toDouble / prevTot(key >> 32).toDouble
-      }.toMap
-    } finally graft.core.Persist.unstage(spark, blocksB)
-    BigramLM(vocab, uniProb, bigramPml, lambda, alpha, minCount,
-      minBigramCount, nTokens)
-  }
-
-  /** Fit the trigram LM: the [[fitBigramLM]] passes (reused verbatim —
-    * unigram + bigram tables, bounds enforced before any collect) plus
-    * ONE more bounded aggregate for the trigram table, whose per-row
-    * extraction is the same compiled distinct-key pass one order up
-    * ([[graft.functions.LookupExprs.TrigramKeyCounts]]). Context totals
-    * come from the trigram aggregate itself (`key >> 21` — every
-    * position has exactly one (u, v) context, so the ML term is exactly
-    * normalized), and both the context and the kept-trigram tables are
-    * probed against `maxTrigramEntries` BEFORE the pull: the model rides
-    * every scoring task as a plan literal, so its size is a deliberate
-    * budget, never an accident of the corpus.
-    */
-  def fitTrigramLM(df: DataFrame, textCol: String, alpha: Double = 1.0,
-      lambda1: Double = 0.7, lambda2: Double = 0.5, minCount: Long = 1L,
-      minBigramCount: Long = 1L, minTrigramCount: Long = 1L,
-      maxVocabEntries: Int = 1 << 18,
-      maxBigramEntries: Int = 1 << 21,
-      maxTrigramEntries: Int = 1 << 21): TrigramLM = {
-    require(lambda2 > 0 && lambda2 < 1,
-      s"fitTrigramLM: lambda2 $lambda2 must be in (0, 1) — at 1 the " +
-        "unigram floor vanishes and an unseen trigram would be ln 0")
-    require(maxVocabEntries + 2 < (1 << 21),
-      s"fitTrigramLM: maxVocabEntries $maxVocabEntries exceeds the " +
-        "21-bit id packing (u·2⁴²+v·2²¹+w)")
-    val bi = fitBigramLM(df, textCol, alpha, lambda1, minCount,
-      minBigramCount, maxVocabEntries, maxBigramEntries)
-    // Repack the bigram table from the 2³² training keys to the 21-bit
-    // width the trigram packing shares (pure driver-side rekey).
-    val bigram21 = bi.bigramPml.map { case (k, p) =>
-      (((k >>> 32) << 21) | (k & 0xFFFFFFFFL)) -> p
-    }
-    val spark = df.sparkSession
-    val (aggT, blocksT) = graft.core.Persist.stageTracked(df
-      .select(explode(graft.functions.LookupExprs.trigramKeyCounts(
-        tokensOf(col(textCol)), bi.vocab, bi.unkId, bi.bosId))
-        .as(Seq("key", "cnt")))
-      .groupBy("key").agg(sum(col("cnt")).as("n")))
-    // unstage in finally: the bounds below THROW by design on web-scale
-    // tables — the designed failure path must not leave the trigram
-    // aggregate (the largest intermediate of the fit) pinned.
-    val trigramPml = try {
-      // Bound probes as parallel aggregates BEFORE each pull (the
-      // limit().count() probe's GlobalLimit funneled every row through
-      // one partition; a plain count aggregates in parallel and the
-      // designed web-scale throw still happens at aggregate cost).
-      val ctxFrame = aggT.groupBy(shiftright(col("key"), 21).as("ctx"))
-        .agg(sum(col("n")).as("t"))
-      // ONE aggregate probes BOTH bounds (distinct contexts + kept grams)
-      // before either collect — two separate probe jobs over the same
-      // staged aggregate folded into one.
-      val probe = aggT.agg(
-        count_distinct(shiftright(col("key"), 21)),
-        sum(when(col("n") >= minTrigramCount, 1L).otherwise(0L))).head()
-      val nCtx = probe.getLong(0)
-      require(nCtx <= maxTrigramEntries,
-        s"fitTrigramLM: > $maxTrigramEntries distinct (u, v) contexts — " +
-          "raise minCount (shrinking the vocab shrinks the context space) " +
-          "or raise maxTrigramEntries deliberately")
-      val ctxTot = ctxFrame.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      val keptT = aggT.filter(col("n") >= minTrigramCount)
-      val triSize = if (probe.isNullAt(1)) 0L else probe.getLong(1)
-      require(triSize <= maxTrigramEntries,
-        s"fitTrigramLM: trigram table has > $maxTrigramEntries entries " +
-          "(bound) — raise minTrigramCount to shrink it, or raise " +
-          "maxTrigramEntries deliberately")
-      keptT.collect().map { r =>
-        val key = r.getLong(0)
-        key -> r.getLong(1).toDouble / ctxTot(key >> 21).toDouble
-      }.toMap
-    } finally graft.core.Persist.unstage(spark, blocksT)
-    TrigramLM(bi.vocab, bi.uniProb, bigram21, trigramPml, lambda1, lambda2,
-      alpha, minCount, minBigramCount, minTrigramCount, bi.nTokens)
-  }
-
   /** Fit the order-n hashed-key LM: the shared unigram pass, then ONE
     * bounded aggregate for ALL orders k = 2..n over per-row DISTINCT
     * (ord, ctx, key) hash triples
@@ -317,10 +124,9 @@ object NgramLm {
     * order from one window slide, so the corpus is tokenized, scanned
     * and shuffled once, not once per order) — context totals group the
     * SAME aggregate by (ord, ctx) (every position has exactly one
-    * context per order, so each ML term normalizes exactly, the
-    * [[fitTrigramLM]] invariant carried to arbitrary order). Both the
-    * context and the kept-gram tables of every order are probed against
-    * `maxNgramEntries` BEFORE any collect, and the staged aggregate
+    * context per order, so each ML term normalizes exactly). Both the
+    * context and the kept-gram tables of every order are held to
+    * `maxNgramEntries` BEFORE their collect, and the staged aggregate
     * unstages in finally — the designed throw on a web-scale gram table
     * must not leave pinned blocks. `lambdas(k−2)` weights order k's ML
     * term; defaults follow the heavier-trust-in-lower-orders shape
@@ -364,34 +170,40 @@ object NgramLm {
         col("e.key").as("key"), col("e.cnt").as("cnt"))
       .groupBy("ord", "ctx", "key").agg(sum(col("cnt")).as("n")))
     val tables = try {
-      // ALL orders' bound probes and pulls in THREE jobs total, not four
-      // per order: ONE per-order aggregate probes both bounds, then one
-      // collect for the context totals and one for the kept grams. The
-      // probes still run BEFORE each collect (a web-scale table must fail
-      // at aggregate cost, never OOM the driver), and each per-order
-      // bound is checked exactly as the per-order loop checked it — only
-      // the driver round-trips per order (4 jobs × (order − 1) at order 5
-      // on a 16-job ladder) are gone.
-      val ctxFrame = aggAll.groupBy("ord", "ctx").agg(sum(col("n")).as("t"))
-      // ONE per-order aggregate probes BOTH bounds (distinct contexts and
-      // kept grams) before either collect — the former two probe jobs over
-      // the same staged aggregate folded into one.
-      aggAll.groupBy("ord").agg(count_distinct(col("ctx")).as("c"),
-          sum(when(col("n") >= minNgramCount, 1L).otherwise(0L)).as("k"))
-        .collect().foreach { r =>
-        require(r.getLong(1) <= maxNgramEntries,
-          s"fitNgramLM: order ${r.getInt(0)} has > $maxNgramEntries " +
+      // ALL orders' bounds and pulls in at most three jobs: a probe, one
+      // collect for the context totals and one for the kept grams. Each
+      // bound holds BEFORE the collect it guards (a web-scale table must
+      // fail at aggregate cost, never OOM the driver).
+      val kept = sum(when(col("n") >= minNgramCount, 1L).otherwise(0L))
+      val ctxFrame = aggAll.groupBy("ord", "ctx")
+        .agg(sum(col("n")).as("t"), kept.as("k"))
+      def requireBounds(ord: Int, contexts: Long, keptGrams: Long): Unit = {
+        require(contexts <= maxNgramEntries,
+          s"fitNgramLM: order $ord has > $maxNgramEntries " +
             "distinct contexts (bound) — raise minCount (shrinking the " +
             "vocab shrinks the context space) or raise maxNgramEntries " +
             "deliberately")
-        require((if (r.isNullAt(2)) 0L else r.getLong(2)) <= maxNgramEntries,
-          s"fitNgramLM: order-${r.getInt(0)} gram table has > " +
+        require(keptGrams <= maxNgramEntries,
+          s"fitNgramLM: order-$ord gram table has > " +
             s"$maxNgramEntries entries (bound) — raise minNgramCount to " +
             "shrink it, or raise maxNgramEntries deliberately")
       }
+      // Order 2's contexts are single ids, at most V + 2 rows under the
+      // vocabulary bound fitUnigram enforced, so their pull needs no probe:
+      // it carries the kept-gram count, and both bounds are checked before
+      // the kept collect (the probe's jobs were a quarter of a bigram fit
+      // at sf0.1). Higher orders' contexts have no such bound, so ONE
+      // per-order aggregate probes both bounds before either collect.
+      if (order > 2)
+        aggAll.groupBy("ord").agg(count_distinct(col("ctx")), kept).collect()
+          .foreach(r => requireBounds(r.getInt(0), r.getLong(1),
+            if (r.isNullAt(2)) 0L else r.getLong(2)))
+      val ctxRows = ctxFrame.collect()
+      if (order == 2)
+        requireBounds(2, ctxRows.length, ctxRows.iterator.map(_.getLong(3)).sum)
       val ctxTotByOrd =
         Array.fill(order + 1)(new scala.collection.mutable.LongMap[Long]())
-      ctxFrame.collect().foreach(r =>
+      ctxRows.foreach(r =>
         ctxTotByOrd(r.getInt(0)).update(r.getLong(1), r.getLong(2)))
       val keptAll = aggAll.filter(col("n") >= minNgramCount)
       val builders = Array.fill(order + 1)(Map.newBuilder[Long, Double])
@@ -407,13 +219,14 @@ object NgramLm {
   }
 
   /** Per-document log-likelihood + token count under the fitted LM —
-    * one tight-loop pass ([[graft.functions.LookupExprs.BigramLmScore]] /
-    * [[graft.functions.LookupExprs.TrigramLmScore]]), zero shuffle. An
-    * empty document is (ll = 0, n = 0).
+    * one tight-loop pass ([[graft.functions.LookupExprs.NgramHashLmScore]]),
+    * zero shuffle. An empty document is (ll = 0, n = 0).
     */
-  def logLik(df: DataFrame, textCol: String, model: FittedLM,
+  def logLik(df: DataFrame, textCol: String, model: NgramLM,
       llCol: String = "lm_ll", nCol: String = "lm_tokens"): DataFrame = {
-    df.withColumn("__lm", model.scoreColumn(tokensOf(col(textCol))))
+    df.withColumn("__lm", graft.functions.LookupExprs.ngramHashLmScore(
+        tokensOf(col(textCol)), model.vocab, model.uniProb, model.tables,
+        model.lambdas, model.bosId))
       .withColumn(llCol, col("__lm.ll"))
       .withColumn(nCol, col("__lm.n"))
       .drop("__lm")
@@ -425,20 +238,10 @@ object NgramLm {
     * discards the noise head. Compose with
     * [[CorpusPrep.scorePercentileRank]] for the percentile cut.
     */
-  def perplexity(df: DataFrame, textCol: String, model: FittedLM,
+  def perplexity(df: DataFrame, textCol: String, model: NgramLM,
       outCol: String = "ppl", llCol: String = "lm_ll",
       nCol: String = "lm_tokens"): DataFrame =
     logLik(df, textCol, model, llCol, nCol)
       .withColumn(outCol,
         when(col(nCol) > 0, exp(-col(llCol) / col(nCol))))
-
-  /** Train-then-score over the same frame — the self-scored corpus-prep
-    * shape (fit the LM on the corpus, flag each document's fit to it).
-    */
-  def perplexityScores(df: DataFrame, textCol: String, alpha: Double = 1.0,
-      lambda: Double = 0.7, minCount: Long = 1L, minBigramCount: Long = 1L,
-      outCol: String = "ppl"): DataFrame =
-    perplexity(df, textCol,
-      fitBigramLM(df, textCol, alpha, lambda, minCount, minBigramCount),
-      outCol)
 }

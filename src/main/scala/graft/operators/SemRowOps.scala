@@ -10,10 +10,12 @@ import graft.llm.Prompts.Example
 /** Per-row semantic operators: sem_map, sem_filter, sem_extract, and the
   * pair-wise sem_join built on the filter core.
   *
-  * Physical shape (all of them): project referenced columns → one
-  * `mapPartitions` LLM stage appending the raw answer → native-expression
-  * postprocessing. Filters become a real Catalyst `Filter` over the parsed
-  * boolean, so downstream pruning/pushdown still applies.
+  * Physical shape (all of them): one `mapPartitions` LLM stage over the
+  * WHOLE input frame, appending the raw answer → native-expression
+  * postprocessing. The prompt reads only the referenced columns, but no
+  * projection happens first: every input column rides through the stage,
+  * and Catalyst cannot push a later filter or column pruning below it.
+  * Filters become a real Catalyst `Filter` over the parsed boolean.
   */
 object SemRowOps {
 

@@ -41,11 +41,12 @@ object Dev {
   }
 
   /** Warm the JVM and codegen paths so the first measured query is not
-    * charged for session bootstrap.
+    * charged for session bootstrap. Reads `documents.parquet`, the table
+    * both an sf directory and a `ScaleStress` blow-up hold.
     */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    spark.read.parquet(s"$sfDir/documents.parquet").count()
   }
 
   /** Per-query isolation, OUTSIDE the timing window: operators stage

@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The dev mains check their arguments before they build a session: a
   * missing argument, an unknown mode or an unknown scenario is a usage
   * message naming the valid forms, not an ArrayIndexOutOfBoundsException
   * after Spark start-up.
   */
-class DevMainsSpec extends AnyFunSuite {
+class DevMainsSpec extends SparkSpec {
 
   test("Profile rejects a missing argument or an unknown mode with its usage") {
     for (args <- Seq(Array[String](), Array("jobs"), Array("jobs", "/d"),
@@ -31,5 +29,14 @@ class DevMainsSpec extends AnyFunSuite {
       val msg = tools.ScaleStress.scenario(args).swap.getOrElse(fail())
       Seq("gates", "fuzzy", "io", "dsir").foreach(s => assert(msg.contains(s), msg))
     }
+  }
+
+  test("Dev.warmUp runs on a directory that holds only documents.parquet") {
+    // A ScaleStress blow-up directory has documents, embeddings and events
+    // but none of the sf dimension tables.
+    val dir = java.nio.file.Files.createTempDirectory("warmup").toString
+    spark.range(3).selectExpr("id AS doc_id", "'a b' AS text")
+      .write.parquet(s"$dir/documents.parquet")
+    tools.Dev.warmUp(spark, dir)
   }
 }

@@ -273,6 +273,33 @@ class LexicalSpec extends SparkSpec {
     assert(comp == reb, s"$comp vs $reb")
   }
 
+  test("an index with no postings searches empty: all deleted then compacted, or all-blank") {
+    val docs = Seq((1L, "spark join"), (2L, "window spark")).toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("lex_empty").toString
+    LexIndex.save(docs, "text", "doc_id", s"$tmp/idx")
+    assert(LexIndex.delete(docs, "doc_id", s"$tmp/idx") == 2L)
+    LexIndex.compactDeletes(spark, s"$tmp/idx", s"$tmp/compacted")
+    val blank = Seq((1L, ""), (2L, "  ")).toDF("doc_id", "text")
+    LexIndex.save(blank, "text", "doc_id", s"$tmp/blank")
+    for (idx <- Seq(s"$tmp/compacted", s"$tmp/blank")) {
+      assert(LexIndex.search(spark, idx, "spark window", k = 10).collect().isEmpty, idx)
+      assert(LexIndex.searchBatch(spark, idx, Seq((0L, "spark"), (1L, "join")), k = 5)
+        .collect().isEmpty, idx)
+      val info = LexIndex.describe(spark, idx)
+      assert(info.docs == 0L && info.postings == 0L && info.terms == 0L &&
+        info.statsDocsStale == 0.0, s"$idx: $info")
+    }
+    // The emptied index takes appends again, and they score as a fresh one.
+    val more = Seq((3L, "spark streaming")).toDF("doc_id", "text")
+    LexIndex.append(more, "text", "doc_id", s"$tmp/compacted")
+    LexIndex.save(more, "text", "doc_id", s"$tmp/fresh")
+    val grown = LexIndex.search(spark, s"$tmp/compacted", "spark", k = 10)
+      .as[(Long, Double)].collect().toSeq
+    val fresh = LexIndex.search(spark, s"$tmp/fresh", "spark", k = 10)
+      .as[(Long, Double)].collect().toSeq
+    assert(grown == fresh && grown.map(_._1) == Seq(3L), s"$grown vs $fresh")
+  }
+
   test("tfidf top terms: discriminative terms win, ubiquitous terms score zero") {
     val docs = Seq(
       (1L, "spark spark unique common"),

@@ -10,22 +10,26 @@ class NgramLmSpec extends SparkSpec {
   // (B,a)×2, (a,b)×2, (b,a)×1 — every kept context is deterministic ML 1.
   private def tiny = Seq((0L, "a b a"), (1L, "a b")).toDF("id", "text")
 
+  /** The table key of a gram: the kernels' hash of its id window. */
+  private def g(ids: Long*): Long =
+    graft.functions.LookupExprs.gramHash(ids.toArray, 0, ids.size)
+
   test("fit recovers exact unigram and bigram tables on a hand corpus") {
-    val m = NgramLm.fitBigramLM(tiny, "text")
+    val m = NgramLm.fitNgramLM(tiny, "text", order = 2)
     assert(m.vocab == Map("a" -> 0, "b" -> 1))
     assert(m.nTokens == 5L)
     // denom = 5 + 1·(2+1) = 8; unk mass 0
     assert(m.uniProb.toSeq == Seq(4.0 / 8, 3.0 / 8, 1.0 / 8))
     val bos = m.bosId.toLong
-    assert(m.bigramPml == Map(
-      (bos << 32 | 0L) -> 1.0,   // (BOS, a) 2/2
-      (0L << 32 | 1L) -> 1.0,    // (a, b)   2/2
-      (1L << 32 | 0L) -> 1.0))   // (b, a)   1/1
+    assert(m.tables == IndexedSeq(Map(
+      g(bos, 0L) -> 1.0,   // (BOS, a) 2/2
+      g(0L, 1L) -> 1.0,    // (a, b)   2/2
+      g(1L, 0L) -> 1.0)))  // (b, a)   1/1
   }
 
   test("logLik folds λ·pml + (1−λ)·p_uni left-to-right from BOS") {
-    val m = NgramLm.fitBigramLM(tiny, "text")
-    val lam = m.lambda
+    val m = NgramLm.fitNgramLM(tiny, "text", order = 2)
+    val lam = m.lambdas(0)
     val ll = NgramLm.logLik(tiny, "text", m)
       .filter(col("id") === 1L).select("lm_ll", "lm_tokens").head()
     // doc "a b": ln(λ·1 + (1−λ)·p(a)) + ln(λ·1 + (1−λ)·p(b))
@@ -35,29 +39,29 @@ class NgramLmSpec extends SparkSpec {
   }
 
   test("an unseen bigram backs off to the unigram alone") {
-    val m = NgramLm.fitBigramLM(tiny, "text")
+    val m = NgramLm.fitNgramLM(tiny, "text", order = 2)
     val ba = spark.createDataFrame(Seq((0L, "b b"))).toDF("id", "text")
     val ll = NgramLm.logLik(ba, "text", m).select("lm_ll").head().getDouble(0)
     // (BOS, b) and (b, b) are both unseen → pml = 0 at every position
     val pb = 3.0 / 8
-    assert(ll == 2 * math.log((1.0 - m.lambda) * pb))
+    assert(ll == 2 * math.log((1.0 - m.lambdas(0)) * pb))
   }
 
   test("minCount folds hapaxes into a live <unk> with their exact mass") {
     // "a a b": a kept (c = 2), b → unk; denom = 3 + 1·(1+1) = 5
     val df = Seq((0L, "a a b")).toDF("id", "text")
-    val m = NgramLm.fitBigramLM(df, "text", minCount = 2L)
+    val m = NgramLm.fitNgramLM(df, "text", order = 2, minCount = 2L)
     assert(m.vocab == Map("a" -> 0))
     assert(m.uniProb.toSeq == Seq(3.0 / 5, 2.0 / 5))
     // OOV scoring: "c" maps to unk; (BOS, unk) unseen → unigram only
     val oov = spark.createDataFrame(Seq((0L, "c"))).toDF("id", "text")
     val ll = NgramLm.logLik(oov, "text", m).select("lm_ll").head().getDouble(0)
-    assert(ll == math.log((1.0 - m.lambda) * (2.0 / 5)))
+    assert(ll == math.log((1.0 - m.lambdas(0)) * (2.0 / 5)))
   }
 
   test("empty and whitespace-only docs are (ll = 0, n = 0) with null ppl") {
     val df = Seq((0L, "a b a"), (1L, ""), (2L, "   ")).toDF("id", "text")
-    val m = NgramLm.fitBigramLM(df, "text")
+    val m = NgramLm.fitNgramLM(df, "text", order = 2)
     val rows = NgramLm.perplexity(df, "text", m)
       .select("id", "lm_ll", "lm_tokens", "ppl").orderBy("id").collect()
     assert(rows(1).getDouble(1) == 0.0 && rows(1).getInt(2) == 0 &&
@@ -75,7 +79,8 @@ class NgramLmSpec extends SparkSpec {
     val docs = (0 until 20).map(i => (i.toLong, "the quick brown fox")) :+
       (20L, "zxq wvu tsr qpo")
     val df = docs.toDF("id", "text")
-    val scored = NgramLm.perplexityScores(df, "text", minCount = 2L)
+    val scored = NgramLm.perplexity(df, "text",
+        NgramLm.fitNgramLM(df, "text", order = 2, minCount = 2L))
       .select("id", "ppl").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(scored(0L) < scored(20L))
   }
@@ -83,49 +88,48 @@ class NgramLmSpec extends SparkSpec {
   test("vocab and bigram bounds refuse BEFORE the collect, loudly") {
     val df = Seq((0L, "a b c d e f g h")).toDF("id", "text")
     val e1 = intercept[IllegalArgumentException](
-      NgramLm.fitBigramLM(df, "text", maxVocabEntries = 3))
+      NgramLm.fitNgramLM(df, "text", order = 2, maxVocabEntries = 3))
     assert(e1.getMessage.contains("maxVocabEntries"))
     val e2 = intercept[IllegalArgumentException](
-      NgramLm.fitBigramLM(df, "text", maxBigramEntries = 3))
-    assert(e2.getMessage.contains("maxBigramEntries"))
+      NgramLm.fitNgramLM(df, "text", order = 2, maxNgramEntries = 3))
+    assert(e2.getMessage.contains("maxNgramEntries"))
   }
 
   test("degenerate inputs refuse: empty corpus, bad lambda/alpha") {
     val empty = Seq((0L, "")).toDF("id", "text")
-    intercept[IllegalArgumentException](NgramLm.fitBigramLM(empty, "text"))
     intercept[IllegalArgumentException](
-      NgramLm.fitBigramLM(tiny, "text", lambda = 0.0))
+      NgramLm.fitNgramLM(empty, "text", order = 2))
     intercept[IllegalArgumentException](
-      NgramLm.fitBigramLM(tiny, "text", alpha = 0.0))
+      NgramLm.fitNgramLM(tiny, "text", order = 2, lambdas = Seq(0.0)))
+    intercept[IllegalArgumentException](
+      NgramLm.fitNgramLM(tiny, "text", order = 2, alpha = 0.0))
     // lambda = 1 kills the unigram floor: an UNSEEN bigram in scored
     // text would be ln 0 = -Infinity silently — rejected at fit time.
     intercept[IllegalArgumentException](
-      NgramLm.fitBigramLM(tiny, "text", lambda = 1.0))
+      NgramLm.fitNgramLM(tiny, "text", order = 2, lambdas = Seq(1.0)))
     intercept[IllegalArgumentException](
-      NgramLm.fitTrigramLM(tiny, "text", lambda1 = 1.0))
+      NgramLm.fitNgramLM(tiny, "text", order = 3, lambdas = Seq(1.0, 0.5)))
   }
 
-  test("fitTrigramLM recovers exact trigram/context tables and shares " +
-      "the bigram sub-model with fitBigramLM (repacked to 21-bit ids)") {
-    val m = NgramLm.fitTrigramLM(tiny, "text")
-    val bi = NgramLm.fitBigramLM(tiny, "text")
+  test("order-3 fit recovers exact trigram tables and shares the order-2 sub-model") {
+    val m = NgramLm.fitNgramLM(tiny, "text", order = 3)
+    val bi = NgramLm.fitNgramLM(tiny, "text", order = 2)
     assert(m.vocab == bi.vocab && m.uniProb.toSeq == bi.uniProb.toSeq)
-    assert(m.bigramPml == bi.bigramPml.map { case (k, p) =>
-      (((k >>> 32) << 21) | (k & 0xFFFFFFFFL)) -> p })
+    assert(m.lambdas == IndexedSeq(0.7, 0.5) && bi.lambdas == IndexedSeq(0.7))
+    assert(m.tables(0) == bi.tables(0))
     // "a b a" + "a b": trigram stream (B,B,a)×2, (B,a,b)×2, (a,b,a)×1 —
-    // every context is deterministic, all pml3 = 1 except none.
+    // every context is deterministic, all pml3 = 1.
     val bos = m.bosId.toLong
-    def k3(u: Long, v: Long, w: Long) = (u << 42) | (v << 21) | w
-    assert(m.trigramPml == Map(
-      k3(bos, bos, 0L) -> 1.0,
-      k3(bos, 0L, 1L) -> 1.0,
-      k3(0L, 1L, 0L) -> 1.0))
+    assert(m.tables(1) == Map(
+      g(bos, bos, 0L) -> 1.0,
+      g(bos, 0L, 1L) -> 1.0,
+      g(0L, 1L, 0L) -> 1.0))
   }
 
   test("trigram logLik folds the two-level JM tree left-to-right; an " +
       "unseen trigram backs off to the bigram+unigram interpolation") {
-    val m = NgramLm.fitTrigramLM(tiny, "text")
-    val (l1, l2) = (m.lambda1, m.lambda2)
+    val m = NgramLm.fitNgramLM(tiny, "text", order = 3)
+    val (l1, l2) = (m.lambdas(0), m.lambdas(1))
     val pa = 4.0 / 8
     val pb = 3.0 / 8
     // doc "a b": (B,B,a) seen pml3=1, (B,a,b) seen pml3=1; bigram
@@ -153,36 +157,18 @@ class NgramLmSpec extends SparkSpec {
     val docs = (0 until 10).flatMap(i =>
       Seq((i * 2L, "x a b"), (i * 2L + 1L, "y a c"))).toDF("id", "text")
     val biPpl = NgramLm.perplexity(docs, "text",
-        NgramLm.fitBigramLM(docs, "text"))
+        NgramLm.fitNgramLM(docs, "text", order = 2))
       .agg(avg("ppl")).head().getDouble(0)
     val triPpl = NgramLm.perplexity(docs, "text",
-        NgramLm.fitTrigramLM(docs, "text"))
+        NgramLm.fitNgramLM(docs, "text", order = 3))
       .agg(avg("ppl")).head().getDouble(0)
     assert(triPpl < biPpl, s"trigram $triPpl !< bigram $biPpl")
     val wide = Seq((0L, "a b c d e f g h")).toDF("id", "text")
     val e = intercept[IllegalArgumentException](
-      NgramLm.fitTrigramLM(wide, "text", maxTrigramEntries = 3))
-    assert(e.getMessage.contains("maxTrigramEntries"))
+      NgramLm.fitNgramLM(wide, "text", order = 3, maxNgramEntries = 3))
+    assert(e.getMessage.contains("maxNgramEntries"))
     intercept[IllegalArgumentException](
-      NgramLm.fitTrigramLM(tiny, "text", lambda2 = 1.0))
-    intercept[IllegalArgumentException](
-      NgramLm.fitTrigramLM(tiny, "text", maxVocabEntries = 1 << 21))
-  }
-
-  test("hashed order-2/3 NgramLM scores are BITWISE equal to the packed " +
-      "BigramLM/TrigramLM — same integer-count divisions, same dyadic tree") {
-    val docs = (0 until 8).flatMap(i =>
-      Seq((i * 3L, "x a b c a"), (i * 3L + 1L, "y a c b"),
-        (i * 3L + 2L, "b c x y a a"))).toDF("id", "text")
-    def scores(m: NgramLm.FittedLM): Seq[(Long, Double)] =
-      NgramLm.logLik(docs, "text", m).select("id", "lm_ll")
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
-    assert(scores(NgramLm.fitNgramLM(docs, "text", order = 2,
-        lambdas = Seq(0.7), minCount = 2L)) ==
-      scores(NgramLm.fitBigramLM(docs, "text", minCount = 2L)))
-    assert(scores(NgramLm.fitNgramLM(docs, "text", order = 3,
-        lambdas = Seq(0.7, 0.5), minCount = 2L)) ==
-      scores(NgramLm.fitTrigramLM(docs, "text", minCount = 2L)))
+      NgramLm.fitNgramLM(tiny, "text", order = 3, lambdas = Seq(0.7, 1.0)))
   }
 
   test("order-5 NgramLM: exact ML tables on a hand corpus, monotone ppl " +

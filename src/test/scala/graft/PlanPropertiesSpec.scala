@@ -167,13 +167,15 @@ class PlanPropertiesSpec extends SparkSpec {
       assert(plan.collect { case s: ShuffleExchangeExec => s }.isEmpty,
         s"$what must not shuffle: ${plan.toString.take(1200)}")
     }
-    // the model rides the plan as literals — scoring is one narrow map
-    val lm = graft.operators.NgramLm.BigramLM(
+    // the model rides a broadcast — scoring is one narrow map
+    val lm = graft.operators.NgramLm.NgramLM(
       vocab = Map("a" -> 0, "b" -> 1),
       uniProb = Array(0.5, 0.375, 0.125),
-      bigramPml = Map((2L << 32) -> 1.0),
-      lambda = 0.7, alpha = 1.0, minCount = 1L, minBigramCount = 1L,
-      nTokens = 5L)
+      order = 2,
+      tables = IndexedSeq(Map(graft.functions.LookupExprs.gramHash(
+        Array(2L, 0L), 0, 2) -> 1.0)),
+      lambdas = IndexedSeq(0.7), alpha = 1.0, minCount = 1L,
+      minNgramCount = 1L, nTokens = 5L)
     assertPure(graft.operators.NgramLm.perplexity(docs, "text", lm),
       "bigram-LM scoring")
     assertPure(docs.select(graft.functions.TextFunctions.blocklistMatches(
