@@ -1,17 +1,17 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import graft.tools.Dev
+import graft.tools.{Dev, JobCounter}
 
 /** Dev tool with three modes:
   *
   *  - `jobs <sfDir> <name>[,<name>…] [passes]` (guide §1.5) runs named
-  *    SparkEntry queries with a listener that records every Spark job's
-  *    wall time, call site and description, then prints the per-job
-  *    breakdown — the "where do the seconds go" split for multi-job gates
-  *    (lifecycle ladders, foreachBatch microbatches) that a single plan
-  *    dump cannot show. The LAST pass's jobs are reported (earlier passes
-  *    warm JIT/code caches the way the bench's median does).
+  *    SparkEntry queries under a [[graft.tools.JobCounter]], which records
+  *    every Spark job's wall time, call site, description and tasks run,
+  *    then prints the per-job breakdown — the "where do the seconds go"
+  *    split for multi-job gates (lifecycle ladders, foreachBatch
+  *    microbatches) that a single plan dump cannot show. The LAST pass's
+  *    jobs are reported (earlier passes warm JIT/code caches the way the
+  *    bench's median does).
   *  - `explain <sfDir> [<name>[,<name>…]]` prints the formatted physical
   *    plan of named queries — the `.explain` feedback loop for plan
   *    audits, without writing anything. With no names it dumps a
@@ -60,51 +60,16 @@ object Profile {
     try run(spark) finally spark.stop()
   }
 
-  private final case class JobRec(id: Int, var desc: String = "",
-      var callSite: String = "", var t0: Long = 0L, var t1: Long = 0L,
-      var nTasks: Int = 0)
-
   private def jobs(spark: SparkSession, sfDir: String, names: Seq[String],
       passes: Int): Unit = {
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
-    @volatile var recording = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = if (recording) {
-        val r = JobRec(js.jobId)
-        r.t0 = js.time
-        r.desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        // Most jobs carry no callSite.short property; the name Spark gives
-        // the job's last (result) stage is its call site.
-        r.callSite = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
-          .getOrElse("")
-        r.nTasks = js.stageInfos.map(_.numTasks).sum
-        jobs.put(js.jobId, r)
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        val r = jobs.get(je.jobId)
-        if (r != null) r.t1 = je.time
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     Dev.warmUp(spark, sfDir)
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
-      var last = 0.0
-      for (p <- 1 to passes) {
-        if (p == passes) { jobs.clear(); recording = true }
-        last = Dev.time(fn(spark, sfDir).count())._2
-        // Listener events arrive asynchronously: drain them while still
-        // recording, so the pass's last jobs are in the map with their ends.
-        org.apache.spark.sql.graft.ListenerBusBridge.waitUntilEmpty(spark.sparkContext)
-        recording = false
-        Dev.isolate(spark)
-      }
-      import scala.jdk.CollectionConverters._
-      val recs = jobs.values.asScala.toSeq.sortBy(_.id)
+      for (_ <- 1 until passes) { fn(spark, sfDir).count(); Dev.isolate(spark) }
+      val ((_, last), recs) = JobCounter.around(spark.sparkContext)(
+        Dev.time(fn(spark, sfDir).count()))
+      Dev.isolate(spark)
       val sumJobs = recs.map(r => math.max(0L, r.t1 - r.t0)).sum / 1e3
       println(f"==== $name: last-pass wall ${last}%.2f s, ${recs.size} jobs, sum-of-jobs ${sumJobs}%.2f s (gaps = driver work) ====")
       var prevEnd = 0L
@@ -112,7 +77,7 @@ object Profile {
         val gap = if (prevEnd == 0L) 0.0 else math.max(0L, r.t0 - prevEnd) / 1e3
         prevEnd = math.max(prevEnd, r.t1)
         val ms = math.max(0L, r.t1 - r.t0)
-        println(f"job ${r.id}%4d ${ms}%6d ms  gap ${gap}%7.3f s  tasks ${r.nTasks}%4d  ${r.callSite.take(46)}%-46s  ${r.desc.take(80)}")
+        println(f"job ${r.id}%4d ${ms}%6d ms  gap ${gap}%7.3f s  tasks ${r.tasks}%4d  ${r.callSite.take(46)}%-46s  ${r.desc.take(80)}")
       }
     }
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Bounded
 
 /** Corpus-preparation operators for training-data pipelines: deterministic
   * sampling, per-group quotas (data mixing), and sequence packing. All
@@ -93,14 +94,13 @@ object CorpusPrep {
     require(alpha >= 0.0 && alpha <= 1.0,
       s"temperatureFractions: alpha $alpha outside [0,1] (1 = proportional, " +
         "0 = equal budget per group)")
-    val countsDf = df.groupBy(col(groupCol).cast("string").as("__g"))
-      .agg(count(lit(1)).as("__n"))
-    val probe = countsDf.limit(maxGroups + 1).count()
-    require(probe <= maxGroups,
-      s"temperatureFractions: more than $maxGroups groups — the group " +
-        "histogram must fit the driver; coarsen the group column")
-    val counts = countsDf.collect().map(r => (r.getString(0), r.getLong(1)))
-      .sortBy(_._1).toSeq
+    val pulled = Bounded.pull(df.groupBy(col(groupCol).cast("string").as("__g"))
+        .agg(count(lit(1)).as("__n")), maxGroups, "temperatureFractions",
+      s"groups in $groupCol", "maxGroups",
+      "the group histogram must fit the driver; coarsen the group column")
+    require(!pulled.exists(_.isNullAt(0)),
+      s"temperatureFractions: null group in $groupCol — filter or impute first")
+    val counts = pulled.map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
     var open = counts
     var fixed = Map.empty[String, Double]
     var budget = targetRows.toDouble
@@ -579,41 +579,46 @@ object CorpusPrep {
   def scorePercentRank(df: DataFrame, scoreCol: String,
       outCol: String = "score_pct",
       maxScoreBuckets: Int = 100000): DataFrame = {
-    // ONE scan of the corpus: the histogram is cached (bounded by the cap,
-    // checked below), the cardinality probe and the total both read it.
+    // ONE scan of the corpus: the histogram is cached, and ONE aggregate
+    // over it counts its buckets, its null scores and the total.
     val counts = df.groupBy(col(scoreCol)).agg(count(lit(1)).as("__c"))
       .persist()
     try {
-      val nDistinct = counts.limit(maxScoreBuckets + 1).count()
-      require(nDistinct <= maxScoreBuckets,
-        s"scorePercentRank: > $maxScoreBuckets distinct scores — quantize the " +
-          "score first (the cumulative pass must stay driver-bounded)")
+      val stats = counts.agg(count(lit(1)), count_if(col(scoreCol).isNull),
+        coalesce(sum(col("__c")), lit(0L))).head()
+      Bounded.check(stats.getLong(0), maxScoreBuckets, "scorePercentRank",
+        "distinct scores", "maxScoreBuckets",
+        "quantize the score first (the cumulative pass must stay driver-bounded)")
       // A null score would silently vanish in the equi-join below while
       // still inflating every other row's denominator — refuse loudly
       // (percent_rank over nulls has no portable definition anyway).
-      require(counts.filter(col(scoreCol).isNull).isEmpty,
+      require(stats.getLong(1) == 0L,
         s"scorePercentRank: $scoreCol contains nulls — filter or impute first")
-      val total = counts.agg(sum(col("__c"))).head().getLong(0)
+      val total = stats.getLong(2)
       val w = Window.orderBy(col(scoreCol))
         .rowsBetween(Window.unboundedPreceding, -1)
-      // The rank table is bounded by the cap and destined for a broadcast
-      // anyway — materialize it now so the cache can be freed eagerly and
-      // the caller's action never re-scans the corpus for it.
-      val ranksRows = counts
-        .withColumn("__below", coalesce(sum(col("__c")).over(w), lit(0L)))
-        .select(col(scoreCol), col("__below")).collect().toSeq
-      val ranks = df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(ranksRows, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          df.schema(scoreCol),
-          org.apache.spark.sql.types.StructField("__below",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      df.join(broadcast(ranks), Seq(scoreCol))
+      joinRanks(df, Seq(scoreCol), counts
+          .withColumn("__below", coalesce(sum(col("__c")).over(w), lit(0L)))
+          .select(col(scoreCol), col("__below")))
         .withColumn(outCol,
           if (total <= 1L) lit(0.0)
           else col("__below").cast("double") / lit((total - 1).toDouble))
         .drop("__below")
     } finally counts.unpersist()
+  }
+
+  /** `df` joined on `keys` to the rank table `ranks` (the keys plus long
+    * rank columns), collected now: the table is bounded by the histogram
+    * cap and destined for a broadcast anyway, so the cached histogram can
+    * be freed eagerly and the caller's action never re-scans the corpus.
+    */
+  private def joinRanks(df: DataFrame, keys: Seq[String],
+      ranks: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val schema = org.apache.spark.sql.types.StructType(ranks.schema.map(f =>
+      if (keys.contains(f.name)) df.schema(f.name) else f.copy(nullable = false)))
+    df.join(broadcast(spark.createDataFrame(
+      spark.sparkContext.parallelize(ranks.collect().toSeq, 1), schema)), keys)
   }
 
   /** Per-GROUP percent-rank calibration — the within-source score
@@ -635,34 +640,24 @@ object CorpusPrep {
       .agg(count(lit(1)).as("__c"))
       .persist()
     try {
-      val nBuckets = counts.limit(maxScoreBuckets + 1).count()
-      require(nBuckets <= maxScoreBuckets,
-        s"scorePercentRankByGroup: > $maxScoreBuckets (group, score) " +
-          "buckets — quantize the score first (the cumulative pass must " +
-          "stay bounded)")
-      require(counts.filter(col(scoreCol).isNull || col(groupCol).isNull).isEmpty,
+      val stats = counts.agg(count(lit(1)),
+        count_if(col(scoreCol).isNull || col(groupCol).isNull)).head()
+      Bounded.check(stats.getLong(0), maxScoreBuckets, "scorePercentRankByGroup",
+        "(group, score) buckets", "maxScoreBuckets",
+        "quantize the score first (the cumulative pass must stay bounded)")
+      require(stats.getLong(1) == 0L,
         s"scorePercentRankByGroup: null $groupCol/$scoreCol — filter or " +
           "impute first (a null would vanish in the equi-join while " +
           "inflating its group's denominator)")
       // Window over the BOUNDED histogram (≤ maxScoreBuckets rows), not
-      // the corpus; materialized so the cache can be freed eagerly.
+      // the corpus.
       val wb = Window.partitionBy(col(groupCol)).orderBy(col(scoreCol))
         .rowsBetween(Window.unboundedPreceding, -1)
       val wn = Window.partitionBy(col(groupCol))
-      val ranksRows = counts
-        .withColumn("__below", coalesce(sum(col("__c")).over(wb), lit(0L)))
-        .withColumn("__ng", sum(col("__c")).over(wn))
-        .select(col(groupCol), col(scoreCol), col("__below"), col("__ng"))
-        .collect().toSeq
-      val ranks = df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(ranksRows, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          df.schema(groupCol), df.schema(scoreCol),
-          org.apache.spark.sql.types.StructField("__below",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("__ng",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      df.join(broadcast(ranks), Seq(groupCol, scoreCol))
+      joinRanks(df, Seq(groupCol, scoreCol), counts
+          .withColumn("__below", coalesce(sum(col("__c")).over(wb), lit(0L)))
+          .withColumn("__ng", sum(col("__c")).over(wn))
+          .select(col(groupCol), col(scoreCol), col("__below"), col("__ng")))
         .withColumn(outCol,
           when(col("__ng") <= 1L, lit(0.0))
             .otherwise(col("__below").cast("double") /
@@ -1234,14 +1229,10 @@ object CorpusPrep {
   def selectByTokenBudget(df: DataFrame, scoreCol: String, tokenCol: String,
       idCol: String, budget: Long, maxScoreBuckets: Int = 100000): DataFrame = {
     require(budget > 0, s"selectByTokenBudget: budget $budget must be positive")
-    val hist = df.groupBy(col(scoreCol).as("__s"))
-      .agg(sum(col(tokenCol).cast("long")).as("__t"))
-      .orderBy(col("__s").desc)
-      .limit(maxScoreBuckets + 1)
-      .collect()
-    require(hist.length <= maxScoreBuckets,
-      s"selectByTokenBudget: more than $maxScoreBuckets distinct scores — " +
-        s"round '$scoreCol' first (the histogram must fit the driver)")
+    val hist = Bounded.pull(df.groupBy(col(scoreCol).as("__s"))
+        .agg(sum(col(tokenCol).cast("long")).as("__t")).orderBy(col("__s").desc),
+      maxScoreBuckets, "selectByTokenBudget", "distinct scores", "maxScoreBuckets",
+      s"round '$scoreCol' first (the histogram must fit the driver)")
     var cum = 0L
     var i = 0
     while (i < hist.length && cum + hist(i).getLong(1) < budget) {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Sem
+import graft.core.{Bounded, Sem}
 import graft.embed.Embedder
 
 /** Embedding-layer operators (reference lotus/sem_ops/{sem_index, sem_search,
@@ -1159,8 +1159,8 @@ object EmbedOps {
     * BY cluster)` funnels each cluster through one task; with the small k
     * a 100 TB corpus wants, that is the single-partition bottleneck):
     * similarities are ROUNDED to `simDigits`, a bounded (cluster, sim)
-    * histogram — guarded BEFORE the driver collect — yields per-cluster
-    * thresholds, the sub-threshold mass is a PURE FILTER against a
+    * histogram — pulled through [[graft.core.Bounded.pull]] — yields
+    * per-cluster thresholds, the sub-threshold mass is a PURE FILTER against a
     * broadcast threshold frame, and only the boundary buckets (typically
     * a handful of rows at fine `simDigits`) pay an ordered pass, through
     * [[graft.operators.CorpusPrep.runningTotal]]'s range-partitioned
@@ -1187,14 +1187,11 @@ object EmbedOps {
         round(cosineSim(col(v), element_at(centLit, col(clusterCol) + 1)),
           simDigits)))
     try {
-      val histDf = assigned.groupBy(col(clusterCol), col(simCol))
-        .agg(count(lit(1)).as("__n"))
-      val probe = histDf.limit(maxBuckets + 1).count()
-      require(probe <= maxBuckets,
-        s"prunePrototypes: more than $maxBuckets (cluster, sim) buckets — " +
-          "lower simDigits (coarser similarity granularity) or raise " +
-          "maxBuckets deliberately (the histogram must fit the driver)")
-      val hist = histDf.collect()
+      val hist = Bounded.pull(assigned.groupBy(col(clusterCol), col(simCol))
+          .agg(count(lit(1)).as("__n")), maxBuckets, "prunePrototypes",
+        "(cluster, sim) buckets", "maxBuckets", "lower simDigits (coarser " +
+          "similarity granularity) or raise maxBuckets deliberately (the " +
+          "histogram must fit the driver)")
       if (hist.isEmpty) graft.core.Persist.stage(assigned.limit(0))
       else {
         // Per cluster: walk buckets hardest-first (sim asc when keeping

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import graft.core.{NLExpr, ReasoningStrategy, Sem}
+import graft.core.{Bounded, NLExpr, ReasoningStrategy, Sem}
 
 /** Evaluation operators, composed from the core ops exactly as the reference
   * composes them (lotus/evals/llm_as_judge.py, pairwise_judge.py).
@@ -299,19 +299,17 @@ object Evals {
       .agg(sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L)).as("__p"),
         sum(when(col(labelCol).cast("boolean"), 0L).otherwise(1L)).as("__n"))
     val staged = graft.core.Persist.stage(h)
-    val nScores = staged.limit(maxDistinctScores + 1).count()
-    require(nScores <= maxDistinctScores,
-      s"rocAuc: more than $maxDistinctScores distinct scores — the rank " +
-        "window runs over the histogram; quantize the score or raise " +
-        "maxDistinctScores deliberately")
+    // ONE aggregate: the bucket count and both class totals.
+    val stats = staged.agg(count(lit(1)), coalesce(sum(col("__p")), lit(0L)),
+      coalesce(sum(col("__n")), lit(0L))).head()
+    val nScores = stats.getLong(0)
+    Bounded.check(nScores, maxDistinctScores, "rocAuc", "distinct scores",
+      "maxDistinctScores", "the rank window runs over the histogram; " +
+        "quantize the score or raise maxDistinctScores deliberately")
     // Both classes must be present: with P = 0 or N = 0 the closing
     // division would silently emit NaN/Infinity — reject loudly instead,
     // matching passAtK/fleissKappa/calibrationReport's convention.
-    // The check reads the already-staged histogram (bounded rows).
-    val classRow = staged
-      .agg(coalesce(sum(col("__p")), lit(0L)),
-        coalesce(sum(col("__n")), lit(0L))).head()
-    val (nPosTot, nNegTot) = (classRow.getLong(0), classRow.getLong(1))
+    val (nPosTot, nNegTot) = (stats.getLong(1), stats.getLong(2))
     require(nPosTot >= 1 && nNegTot >= 1,
       s"rocAuc: need both classes present, got n_pos=$nPosTot " +
         s"n_neg=$nNegTot — AUC is undefined for a single-class label")
@@ -380,38 +378,43 @@ object Evals {
     *
     * Scale shape: ONE grouped aggregate over the comparisons table
     * (billions of rows → ≤ models² count rows), then a driver-side fit
-    * bounded by `maxModels` — enforced BEFORE the collect. Every
+    * bounded by `maxModels` through [[graft.core.Bounded.pull]]. Every
     * float-order choice is pinned so an engine-independent oracle can
     * replay the fit bit for bit: opponents accumulate in ascending-model
     * order via a plain left fold, win totals are INTEGERS, updates read
     * only the previous iterate, and the final normalizer is the
     * index-order sum of the weight vector.
     *
-    * `winnerCol` must hold 'a' or 'b' (which side of the pair won);
-    * anything else is rejected loudly. Returns (model, wins, games,
-    * score, rank) with rank tie-broken on model.
+    * `winnerCol` must hold 'a' or 'b' (which side of the pair won); any
+    * other value, a self-pair or a null model is rejected loudly. Returns
+    * (model, wins, games, score, rank) with rank tie-broken on model.
     */
   def bradleyTerry(df: DataFrame, aCol: String, bCol: String,
       winnerCol: String, iters: Int = 50, maxModels: Int = 1024): DataFrame = {
     require(iters >= 1, s"bradleyTerry: iters $iters must be >= 1")
-    val badW = df.filter(!col(winnerCol).isin("a", "b")).limit(1).count()
-    require(badW == 0,
+    // A null winner must count as bad: `isin` alone is null there, and the
+    // `otherwise` below would credit side b.
+    val bad = df.agg(
+      count_if(col(winnerCol).isNull || !col(winnerCol).isin("a", "b")),
+      count_if(col(aCol) === col(bCol)),
+      count_if(col(aCol).isNull), count_if(col(bCol).isNull)).head()
+    require(bad.getLong(0) == 0,
       s"bradleyTerry: $winnerCol must be 'a' or 'b' — found other values")
-    val selfPlay = df.filter(col(aCol) === col(bCol)).limit(1).count()
-    require(selfPlay == 0,
+    require(bad.getLong(1) == 0,
       s"bradleyTerry: a model compared against itself carries no signal " +
         "and breaks the pair structure; filter self-pairs first")
+    Seq(aCol -> bad.getLong(2), bCol -> bad.getLong(3)).foreach { case (c, n) =>
+      require(n == 0, s"bradleyTerry: null model in $c — filter or impute first")
+    }
     val dir = df.select(
       when(col(winnerCol) === "a", col(aCol)).otherwise(col(bCol)).as("wm"),
       when(col(winnerCol) === "a", col(bCol)).otherwise(col(aCol)).as("lm"))
-    val nModels = df.select(col(aCol).as("m"))
-      .unionAll(df.select(col(bCol).as("m")))
-      .distinct().limit(maxModels + 1).count()
-    require(nModels <= maxModels,
-      s"bradleyTerry: more than $maxModels distinct models — the fit is " +
-        "models²-dense on the driver; raise maxModels deliberately")
-    val counts = dir.groupBy("wm", "lm").agg(count(lit(1)).as("c"))
-      .collect().map(r => ((r.get(0), r.get(1)), r.getLong(2))).toMap
+    // m models make fewer than m² (winner, loser) rows, hence `per`.
+    val counts = Bounded.pull(dir.groupBy("wm", "lm").agg(count(lit(1)).as("c")),
+        maxModels, "bradleyTerry", "distinct models", "maxModels", "the fit " +
+          "is models²-dense on the driver; raise maxModels deliberately",
+        per = maxModels, units = _.flatMap(r => Seq(r.get(0), r.get(1))).distinct.length)
+      .map(r => ((r.get(0), r.get(1)), r.getLong(2))).toMap
     val models = counts.keysIterator.flatMap(k => Seq(k._1, k._2)).toSeq
       .distinct.sortBy(_.toString)
     val m = models.length
@@ -497,20 +500,19 @@ object Evals {
     val h = df.groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
       .agg(count(lit(1)).as("__n"))
     val staged = graft.core.Persist.stage(h)
-    val nCells = staged.limit(maxDistinctPairs + 1).count()
-    require(nCells <= maxDistinctPairs,
-      s"kendallTauB: more than $maxDistinctPairs distinct (a, b) value " +
-        "pairs — the cell self-join is quadratic in the histogram; " +
-        "quantize the scores or raise maxDistinctPairs deliberately")
+    // ONE aggregate: the cell count and each column's distinct values.
+    val dc = staged.agg(count(lit(1)), countDistinct(col("__a")),
+      countDistinct(col("__b"))).head()
+    Bounded.check(dc.getLong(0), maxDistinctPairs, "kendallTauB",
+      "distinct (a, b) value pairs", "maxDistinctPairs", "the cell " +
+        "self-join is quadratic in the histogram; quantize the scores or " +
+        "raise maxDistinctPairs deliberately")
     // A constant column (or a 0/1-row frame) makes a denominator factor
     // (n0 − n1) or (n0 − n2) zero and τ-b silently NaN — reject loudly,
-    // the same contract as rocAuc's both-classes-present check. The
-    // distinct counts read the bounded staged histogram, not the corpus.
-    val dc = staged.agg(countDistinct(col("__a")).as("da"),
-      countDistinct(col("__b")).as("db")).head()
-    require(dc.getLong(0) >= 2 && dc.getLong(1) >= 2,
-      s"kendallTauB: '$aCol' has ${dc.getLong(0)} and '$bCol' has " +
-        s"${dc.getLong(1)} distinct value(s) — τ-b is undefined (zero " +
+    // the same contract as rocAuc's both-classes-present check.
+    require(dc.getLong(1) >= 2 && dc.getLong(2) >= 2,
+      s"kendallTauB: '$aCol' has ${dc.getLong(1)} and '$bCol' has " +
+        s"${dc.getLong(2)} distinct value(s) — τ-b is undefined (zero " +
         "denominator) unless BOTH score columns take at least two values")
     val x = staged.select(col("__a").as("a1"), col("__b").as("b1"),
       col("__n").as("n1"))

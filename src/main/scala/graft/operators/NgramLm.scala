@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Bounded
 
 /** N-gram language-model perplexity scoring — the third leg of the CCNet
   * corpus pipeline (arXiv 1911.00359: language ID → dedup → a KenLM
@@ -74,7 +75,7 @@ object NgramLm {
     * N (total tokens) sums over ALL words; the sub-`minCount` remainder
     * is exactly the unk mass, so the unigram model normalizes over
     * vocab ∪ {unk} with nothing lost. The `maxVocabEntries` bound is
-    * probed on the staged aggregate BEFORE the collect, and the staged
+    * checked on the totals aggregate BEFORE the collect, and the staged
     * blocks unstage in finally — the designed throw on a web-scale
     * vocabulary must not leave them pinned. Ids are deterministic
     * (token-sorted); they are engine-internal — only the probabilities
@@ -89,19 +90,16 @@ object NgramLm {
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("n")))
     val (uniCounts, nTokens) = try {
-      // ONE aggregate probes the bound AND totals the tokens (the old
-      // shape spent a separate limit().count() job whose GlobalLimit
-      // serialized the probe onto one partition); the collect below then
-      // pulls a vocabulary the probe has already proven bounded.
+      // ONE aggregate counts the kept vocabulary AND totals the tokens;
+      // the collect below then pulls a vocabulary already checked bounded.
       val totRow = aggU.agg(coalesce(sum(col("n")), lit(0L)),
-        sum(when(col("n") >= minCount, 1L).otherwise(0L))).head()
+        count_if(col("n") >= minCount)).head()
       val nTok = totRow.getLong(0)
       require(nTok > 0, "fitUnigram: corpus has no tokens")
-      val vocabSize = if (totRow.isNullAt(1)) 0L else totRow.getLong(1)
-      require(vocabSize <= maxVocabEntries,
-        s"fitUnigram: vocabulary has > $maxVocabEntries entries (bound) — " +
-          "the model rides every scoring task as a plan literal; raise " +
-          "minCount to shrink it, or raise maxVocabEntries deliberately")
+      Bounded.check(totRow.getLong(1), maxVocabEntries,
+        "fitUnigram", "vocabulary entries", "maxVocabEntries", "the model " +
+          "rides every scoring task as a plan literal; raise minCount to " +
+          "shrink it, or raise maxVocabEntries deliberately")
       (aggU.filter(col("n") >= minCount).collect()
         .map(r => (r.getString(0), r.getLong(1))), nTok)
     } finally graft.core.Persist.unstage(spark, blocksU)
@@ -124,13 +122,15 @@ object NgramLm {
     * order from one window slide, so the corpus is tokenized, scanned
     * and shuffled once, not once per order) — context totals group the
     * SAME aggregate by (ord, ctx) (every position has exactly one
-    * context per order, so each ML term normalizes exactly). Both the
-    * context and the kept-gram tables of every order are held to
-    * `maxNgramEntries` BEFORE their collect, and the staged aggregate
-    * unstages in finally — the designed throw on a web-scale gram table
-    * must not leave pinned blocks. `lambdas(k−2)` weights order k's ML
-    * term; defaults follow the heavier-trust-in-lower-orders shape
-    * (0.7, 0.5, 0.4, 0.3, …) truncated to order−1 entries.
+    * context per order, so each ML term normalizes exactly). Every
+    * order's contexts and kept grams are held to `maxNgramEntries`: the
+    * context pull goes through [[graft.core.Bounded.pull]], and the kept
+    * grams are checked on its per-context counts BEFORE their collect.
+    * The staged aggregate unstages in finally — the designed throw on a
+    * web-scale gram table must not leave pinned blocks. `lambdas(k−2)`
+    * weights order k's ML term; defaults follow the
+    * heavier-trust-in-lower-orders shape (0.7, 0.5, 0.4, 0.3, …)
+    * truncated to order−1 entries.
     */
   def fitNgramLM(df: DataFrame, textCol: String, order: Int,
       alpha: Double = 1.0, lambdas: Seq[Double] = Nil,
@@ -170,37 +170,23 @@ object NgramLm {
         col("e.key").as("key"), col("e.cnt").as("cnt"))
       .groupBy("ord", "ctx", "key").agg(sum(col("cnt")).as("n")))
     val tables = try {
-      // ALL orders' bounds and pulls in at most three jobs: a probe, one
-      // collect for the context totals and one for the kept grams. Each
-      // bound holds BEFORE the collect it guards (a web-scale table must
-      // fail at aggregate cost, never OOM the driver).
-      val kept = sum(when(col("n") >= minNgramCount, 1L).otherwise(0L))
-      val ctxFrame = aggAll.groupBy("ord", "ctx")
-        .agg(sum(col("n")).as("t"), kept.as("k"))
-      def requireBounds(ord: Int, contexts: Long, keptGrams: Long): Unit = {
-        require(contexts <= maxNgramEntries,
-          s"fitNgramLM: order $ord has > $maxNgramEntries " +
-            "distinct contexts (bound) — raise minCount (shrinking the " +
-            "vocab shrinks the context space) or raise maxNgramEntries " +
-            "deliberately")
-        require(keptGrams <= maxNgramEntries,
-          s"fitNgramLM: order-$ord gram table has > " +
-            s"$maxNgramEntries entries (bound) — raise minNgramCount to " +
-            "shrink it, or raise maxNgramEntries deliberately")
+      // ALL orders' bounds in the two pulls. Each order's contexts are held
+      // to maxNgramEntries, so the context pull takes at most (order − 1) ×
+      // maxNgramEntries rows; their per-context kept-gram counts then bound
+      // each order's gram table before the kept collect.
+      val ctxRows = Bounded.pull(aggAll.groupBy("ord", "ctx").agg(
+          sum(col("n")).as("t"),
+          sum(when(col("n") >= minNgramCount, 1L).otherwise(0L)).as("k")),
+        maxNgramEntries, "fitNgramLM", "contexts in one order",
+        "maxNgramEntries", "raise minCount (shrinking the vocab shrinks the " +
+          "context space) or raise maxNgramEntries deliberately",
+        per = order - 1,
+        units = _.groupBy(_.getInt(0)).values.map(_.length).maxOption.getOrElse(0))
+      ctxRows.groupBy(_.getInt(0)).foreach { case (ord, rs) =>
+        Bounded.check(rs.iterator.map(_.getLong(3)).sum, maxNgramEntries,
+          "fitNgramLM", s"order-$ord gram-table entries", "maxNgramEntries",
+          "raise minNgramCount to shrink it, or raise maxNgramEntries deliberately")
       }
-      // Order 2's contexts are single ids, at most V + 2 rows under the
-      // vocabulary bound fitUnigram enforced, so their pull needs no probe:
-      // it carries the kept-gram count, and both bounds are checked before
-      // the kept collect (the probe's jobs were a quarter of a bigram fit
-      // at sf0.1). Higher orders' contexts have no such bound, so ONE
-      // per-order aggregate probes both bounds before either collect.
-      if (order > 2)
-        aggAll.groupBy("ord").agg(count_distinct(col("ctx")), kept).collect()
-          .foreach(r => requireBounds(r.getInt(0), r.getLong(1),
-            if (r.isNullAt(2)) 0L else r.getLong(2)))
-      val ctxRows = ctxFrame.collect()
-      if (order == 2)
-        requireBounds(2, ctxRows.length, ctxRows.iterator.map(_.getLong(3)).sum)
       val ctxTotByOrd =
         Array.fill(order + 1)(new scala.collection.mutable.LongMap[Long]())
       ctxRows.foreach(r =>

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Bounded
 
 /** Model-based quality filtering — the trained-classifier stage of
   * published corpus pipelines (CCNet, arXiv 1911.00359, trains a fastText
@@ -45,8 +46,8 @@ object QualityClassifier {
     * and both classes must be present (a one-class fit has no likelihood
     * ratio — that failure is loud, not a NaN model).
     *
-    * The vocabulary literal is BOUNDED (`maxVocabEntries`, the
-    * [[CorpusPrep.unigramSurprisal]] rule): an unbounded vocab would ride
+    * The vocabulary literal is BOUNDED (`maxVocabEntries`, pulled through
+    * [[graft.core.Bounded.pull]]): an unbounded vocab would ride
     * every scoring task as a multi-GB plan literal. Corpora with bigger
     * vocabularies cap deliberately — drop words below a count floor with
     * `minCount` (rare words carry noise, not signal, under NB anyway).
@@ -63,27 +64,20 @@ object QualityClassifier {
       s"trainNaiveBayes: need both classes in $labelCol, " +
         s"got ${docCounts.keys.mkString(",")} — a one-class corpus has no " +
         "likelihood ratio to fit")
-    // The bound is enforced BEFORE any driver collect (stage the
-    // distributed aggregate, probe its size with a bounded count, only
-    // then pull): a web-scale vocabulary must fail at aggregate cost, not
-    // OOM the driver on the very collect the bound exists to prevent.
-    val (agg, blocks) = graft.core.Persist.stageTracked(df
-      .select(y.as("y"),
-        explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word")
-      .agg(sum(when(col("y"), 1L).otherwise(0L)).as("c1"),
-        sum(when(col("y"), 0L).otherwise(1L)).as("c0"))
-      .filter(col("c1") + col("c0") >= minCount))
-    val vocabSize = agg.limit(maxVocabEntries + 1).count()
-    require(vocabSize > 0, "trainNaiveBayes: corpus has no tokens")
-    require(vocabSize <= maxVocabEntries,
-      s"trainNaiveBayes: vocabulary has > $maxVocabEntries entries " +
-        "(bound) — the model rides every scoring task as a plan " +
+    val counts = Bounded.pull(df
+        .select(y.as("y"),
+          explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy("word")
+        .agg(sum(when(col("y"), 1L).otherwise(0L)).as("c1"),
+          sum(when(col("y"), 0L).otherwise(1L)).as("c0"))
+        .filter(col("c1") + col("c0") >= minCount),
+      maxVocabEntries, "trainNaiveBayes", "vocabulary entries",
+      "maxVocabEntries", "the model rides every scoring task as a plan " +
         "literal; raise minCount to shrink it, or raise maxVocabEntries " +
         "deliberately")
-    val counts = agg.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    graft.core.Persist.unstage(df.sparkSession, blocks)
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    require(counts.nonEmpty, "trainNaiveBayes: corpus has no tokens")
     val t1 = counts.map(_._2).sum.toDouble
     val t0 = counts.map(_._3).sum.toDouble
     val v = counts.length.toDouble
@@ -184,8 +178,8 @@ object QualityClassifier {
     * Route with [[graft.functions.TextFunctions.scriptFractions]] first
     * when the corpus mixes script families and you want per-script
     * models. Classes are bounded by `maxClasses` (they ride the scoring
-    * plan k-wide) and the vocab by `maxVocabEntries`, both enforced
-    * BEFORE any driver collect.
+    * plan k-wide) and the vocab by `maxVocabEntries`, both through
+    * [[graft.core.Bounded.pull]].
     */
   def trainLangNB(df: DataFrame, textCol: String, labelCol: String,
       ngramLens: Seq[Int] = Seq(1, 2), alpha: Double = 1.0,
@@ -195,39 +189,32 @@ object QualityClassifier {
     require(ngramLens.nonEmpty && ngramLens.forall(_ >= 1),
       s"trainLangNB: ngramLens $ngramLens must be >= 1")
     require(minCount >= 1, s"trainLangNB: minCount $minCount must be >= 1")
-    val docCounts = df.groupBy(col(labelCol).as("y"))
-      .agg(count(lit(1)).as("n")).limit(maxClasses + 1)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val docCounts = Bounded.pull(df.groupBy(col(labelCol).as("y"))
+        .agg(count(lit(1)).as("n")), maxClasses, "trainLangNB",
+      s"classes in $labelCol", "maxClasses", "the model is k-wide in every " +
+        "scoring row; raise maxClasses deliberately")
+      .map(r => (r.getString(0), r.getLong(1)))
     require(docCounts.nonEmpty, "trainLangNB: empty corpus")
-    require(docCounts.length <= maxClasses,
-      s"trainLangNB: more than $maxClasses classes in $labelCol — the " +
-        "model is k-wide in every scoring row; raise maxClasses deliberately")
     require(docCounts.forall(c => c._1 != null && c._1.nonEmpty),
       s"trainLangNB: null/empty label in $labelCol")
     val classes = docCounts.map(_._1).sorted.toSeq
     val clsIdx = classes.zipWithIndex.toMap
-    // The bound is enforced BEFORE the collect (the trainNaiveBayes
-    // convention): stage the aggregate, probe the DISTINCT-GRAM count
-    // bounded, only then pull ≤ vocab × k rows.
+    // A gram has at most k (gram, class) rows, hence `per`.
     // Per-row gram COUNTS from the tight-loop kernel, so the exploded
     // aggregate input is per-row DISTINCT grams (not every occurrence)
     // and the sum of counts is the identical multiset the composable
     // explode(charNgrams) form would aggregate — spec-matched.
-    val (agg, blocks) = graft.core.Persist.stageTracked(
-      graft.core.Parallelism.spread(df)
-      .select(col(labelCol).as("y"),
-        explode(graft.functions.LookupExprs.charNgramCounts(
-          normText(col(textCol)), ngramLens)).as(Seq("gram", "cnt")))
-      .groupBy("gram", "y").agg(sum(col("cnt")).as("n")))
-    val vocabSize = agg.select("gram").distinct().limit(maxVocabEntries + 1).count()
-    require(vocabSize > 0, "trainLangNB: corpus has no characters")
-    require(vocabSize <= maxVocabEntries,
-      s"trainLangNB: gram vocabulary has > $maxVocabEntries entries " +
-        "(bound) — the model rides every scoring task as a plan literal; " +
-        "shrink ngramLens or raise maxVocabEntries deliberately")
-    val rows = agg.collect().map(r =>
-      (r.getString(0), r.getString(1), r.getLong(2)))
-    graft.core.Persist.unstage(df.sparkSession, blocks)
+    val rows = Bounded.pull(graft.core.Parallelism.spread(df)
+        .select(col(labelCol).as("y"),
+          explode(graft.functions.LookupExprs.charNgramCounts(
+            normText(col(textCol)), ngramLens)).as(Seq("gram", "cnt")))
+        .groupBy("gram", "y").agg(sum(col("cnt")).as("n")),
+      maxVocabEntries, "trainLangNB", "gram vocabulary entries",
+      "maxVocabEntries", "the model rides every scoring task as a plan " +
+        "literal; shrink ngramLens or raise maxVocabEntries deliberately",
+      per = docCounts.length, units = _.map(_.getString(0)).distinct.length)
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    require(rows.nonEmpty, "trainLangNB: corpus has no characters")
     // minCount floors on the gram's TOTAL count across classes (a rare
     // gram is noise everywhere, not just in the class that saw it).
     val byGram = rows.groupBy(_._1).filter(_._2.map(_._3).sum >= minCount)
@@ -326,21 +313,15 @@ object QualityClassifier {
       .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
       .filter(col("word") =!= "")
       .withColumn("__t", lit(isTarget))
-    // Bound enforced pre-collect (the trainNaiveBayes convention): stage
-    // the aggregate, probe its size bounded, only then pull to the driver.
-    val (agg, blocks) = graft.core.Persist.stageTracked(
-      toks(raw, isTarget = false)
+    val counts = Bounded.pull(toks(raw, isTarget = false)
         .unionByName(toks(target, isTarget = true))
         .groupBy("word")
         .agg(sum(when(col("__t"), 1L).otherwise(0L)).as("tn"),
-          sum(when(col("__t"), 0L).otherwise(1L)).as("rn")))
-    val vocabSize = agg.limit(maxVocabEntries + 1).count()
-    require(vocabSize <= maxVocabEntries,
-      s"fitDsir: shared vocabulary has > $maxVocabEntries entries " +
-        "(bound) — the models ride the weighting plan as a " +
+          sum(when(col("__t"), 0L).otherwise(1L)).as("rn")),
+      maxVocabEntries, "fitDsir", "shared vocabulary entries",
+      "maxVocabEntries", "the models ride the weighting plan as a " +
         "literal; raise maxVocabEntries deliberately")
-    val counts = agg.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    graft.core.Persist.unstage(raw.sparkSession, blocks)
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val tgt = counts.collect { case (w, tn, _) if tn > 0 => w -> tn }.toMap
     val rw = counts.collect { case (w, _, rn) if rn > 0 => w -> rn }.toMap
     require(tgt.nonEmpty && rw.nonEmpty, "fitDsir: empty corpus")
@@ -442,11 +423,9 @@ object QualityClassifier {
       sum(when(col(labelCol).cast("boolean"), 1L).otherwise(0L)).as("__p"),
       sum(when(col(labelCol).cast("boolean"), 0L).otherwise(1L)).as("__n"))
     val staged = graft.core.Persist.stage(h)
-    val nScores = staged.limit(maxDistinctScores + 1).count()
-    require(nScores <= maxDistinctScores,
-      s"thresholdForPrecision: more than $maxDistinctScores distinct " +
-        s"scores — round '$scoreCol' first (the cumulative window runs " +
-        "over the histogram)")
+    Bounded.check(staged.count(), maxDistinctScores, "thresholdForPrecision",
+      "distinct scores", "maxDistinctScores",
+      s"round '$scoreCol' first (the cumulative window runs over the histogram)")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("__s").desc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Bounded
 
 /** Subword tokenization for training-data pipelines: a trained vocabulary
   * (frequency-derived or BPE) applied corpus-wide by the greedy
@@ -57,8 +58,8 @@ object Tokenizer {
     * Bounded by construction: `topWords` caps the word side and the n-gram
     * side is ≤ charset^n observed grams — but a giant `charNgramLens` max
     * over a huge charset could still blow the plan literal, so the TOTAL
-    * is guarded by `maxPieces` (the maxVocabEntries convention), enforced
-    * BEFORE any driver collect.
+    * is guarded by `maxPieces` (the maxVocabEntries convention), through
+    * [[graft.core.Bounded.pull]].
     */
   def freqVocab(df: DataFrame, textCol: String, topWords: Int,
       charNgramLens: Seq[Int] = Seq(1), maxPieces: Int = 1 << 17): SubwordVocab = {
@@ -87,16 +88,10 @@ object Tokenizer {
             i => substring(col("w"), i, lit(nlen))))
         .otherwise(array().cast("array<string>"))).as("p"))
     }.reduce(_.unionAll(_))
-    val (agg, blocks) = graft.core.Persist.stageTracked(
-      top.unionAll(grams).distinct())
-    val probe = agg.limit(maxPieces + 1).count()
-    require(probe <= maxPieces,
-      s"freqVocab: vocabulary has > $maxPieces pieces (maxPieces bound) — " +
-        "the vocab rides every tokenize task as a plan literal; shrink " +
-        "charNgramLens or raise maxPieces deliberately")
-    val pieces = agg.collect().map(_.getString(0)).toSeq
-    graft.core.Persist.unstage(df.sparkSession, blocks)
-    SubwordVocab(pieces)
+    val pieces = Bounded.pull(top.unionAll(grams).distinct(), maxPieces,
+      "freqVocab", "pieces", "maxPieces", "the vocab rides every tokenize " +
+        "task as a plan literal; shrink charNgramLens or raise maxPieces deliberately")
+    SubwordVocab(pieces.map(_.getString(0)).toSeq)
   }
 
   /** Byte-pair-encoding vocabulary (Sennrich et al. 2016, arXiv
@@ -104,8 +99,8 @@ object Tokenizer {
     * characters, repeatedly merge the most frequent adjacent symbol pair
     * (count desc, then pair lexicographic asc — fully deterministic) for
     * `numMerges` rounds. The corpus reduces to a bounded word-frequency
-    * table FIRST (one distributed aggregate, the fitDsir collect-bound
-    * convention) and the merge loop runs driver-side over that table —
+    * table FIRST (one aggregate, through [[graft.core.Bounded.pull]])
+    * and the merge loop runs driver-side over that table —
     * O(vocab) work per merge, independent of corpus size; this is how
     * production tokenizers are trained (on samples, not the full corpus).
     *
@@ -118,17 +113,7 @@ object Tokenizer {
   def trainBpe(df: DataFrame, textCol: String, numMerges: Int,
       maxWordEntries: Int = 1 << 18): SubwordVocab = {
     require(numMerges >= 0, s"trainBpe: numMerges $numMerges must be >= 0")
-    val (agg, blocks) = graft.core.Persist.stageTracked(df
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("n")))
-    val probe = agg.limit(maxWordEntries + 1).count()
-    require(probe > 0, "trainBpe: corpus has no tokens")
-    require(probe <= maxWordEntries,
-      s"trainBpe: word table has > $maxWordEntries entries (bound) — " +
-        "fit on a sample (deterministicSample) or raise maxWordEntries")
-    val wordFreq = agg.collect().map(r => (r.getString(0), r.getLong(1)))
-    graft.core.Persist.unstage(df.sparkSession, blocks)
+    val wordFreq = wordTable(df, textCol, maxWordEntries, "trainBpe")
     // Symbol sequences start as codepoint strings.
     var seqs: Array[(Array[String], Long)] = wordFreq.map { case (w, n) =>
       val cps = new scala.collection.mutable.ArrayBuffer[String]()
@@ -176,6 +161,19 @@ object Tokenizer {
     SubwordVocab(merged.toSeq)
   }
 
+  /** The bounded (word, count) table both trainers start from. */
+  private def wordTable(df: DataFrame, textCol: String, maxWordEntries: Int,
+      op: String): Array[(String, Long)] = {
+    val rows = Bounded.pull(df
+        .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("w"))
+        .filter(col("w") =!= "")
+        .groupBy("w").agg(count(lit(1)).as("n")),
+      maxWordEntries, op, "word-table entries", "maxWordEntries",
+      "fit on a sample (deterministicSample) or raise maxWordEntries")
+    require(rows.nonEmpty, s"$op: corpus has no tokens")
+    rows.map(r => (r.getString(0), r.getLong(1)))
+  }
+
   /** Tokenize `textCol` into subword pieces: whitespace words (the corpus
     * convention — lower, trim, split), each greedily longest-matched
     * against the vocab. Adds `outCol` as array<string>. Zero shuffle.
@@ -219,8 +217,8 @@ object Tokenizer {
     * 2018, arXiv 1804.10959 §3.2) in its deterministic hard-EM form:
     *
     *   1. reduce the corpus to a bounded word-frequency table (ONE
-    *      distributed aggregate, the [[trainBpe]] collect-bound
-    *      convention — production tokenizers train on samples);
+    *      distributed aggregate, the one [[trainBpe]] pulls —
+    *      production tokenizers train on samples);
     *   2. seed with every single codepoint (coverage is mandatory) plus
     *      the top `vocabSize·seedMultiplier` multi-codepoint substrings of
     *      length ≤ `maxPieceLen`, scored count·length (the published
@@ -253,18 +251,8 @@ object Tokenizer {
     val cpOrd: Ordering[String] = (a, b) =>
       if (graft.functions.UnigramExpr.cpLess(a, b)) -1
       else if (graft.functions.UnigramExpr.cpLess(b, a)) 1 else 0
-    val (agg, blocks) = graft.core.Persist.stageTracked(df
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("n")))
-    val probe = agg.limit(maxWordEntries + 1).count()
-    require(probe > 0, "trainUnigram: corpus has no tokens")
-    require(probe <= maxWordEntries,
-      s"trainUnigram: word table has > $maxWordEntries entries (bound) — " +
-        "fit on a sample (deterministicSample) or raise maxWordEntries")
-    val wordFreq = agg.collect().map(r => (r.getString(0), r.getLong(1)))
+    val wordFreq = wordTable(df, textCol, maxWordEntries, "trainUnigram")
       .sortBy(_._1)(cpOrd)
-    graft.core.Persist.unstage(df.sparkSession, blocks)
 
     def cpLen(s: String): Int = s.codePointCount(0, s.length)
     // Candidate substring counts (occurrence-weighted by word frequency).

@@ -699,6 +699,14 @@ class CorpusPrepSpec extends SparkSpec {
     assert(math.abs(prop("small") - 0.5) < 1e-12)
   }
 
+  test("temperatureFractions refuses a null group and names the column") {
+    val withNull = skewed.unionByName(
+      Seq((200L, null: String)).toDF("id", "lang"))
+    val e = intercept[IllegalArgumentException](
+      CorpusPrep.temperatureFractions(withNull, "lang", 60, 0.5))
+    assert(e.getMessage.contains("null group in lang"), e.getMessage)
+  }
+
   test("mixByTemperature membership is a pure function of (salt, key)") {
     val a = CorpusPrep.mixByTemperature(skewed, "lang", "id", 60, 0.3,
       salt = "t").select("id").as[Long].collect().toSet

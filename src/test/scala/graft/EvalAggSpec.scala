@@ -194,6 +194,23 @@ class EvalAggSpec extends SparkSpec {
     assert(e.getMessage.contains("'a' or 'b'"))
   }
 
+  test("bradleyTerry refuses a null winner instead of crediting side b") {
+    val games = Seq(("m1", "m2", "a"), ("m1", "m3", "a"), ("m2", "m3", "a"),
+      ("m1", "m2", "a")).toDF("ma", "mb", "winner")
+      .unionByName(Seq(("m1", "m3", null: String)).toDF("ma", "mb", "winner"))
+    val e = intercept[IllegalArgumentException](
+      Evals.bradleyTerry(games, "ma", "mb", "winner"))
+    assert(e.getMessage.contains("'a' or 'b'"), e.getMessage)
+  }
+
+  test("bradleyTerry refuses a null model and names its column") {
+    val games = Seq(("m1", "m2", "a"), ("m2", "m1", "b")).toDF("ma", "mb", "winner")
+      .unionByName(Seq(("m1", null: String, "a")).toDF("ma", "mb", "winner"))
+    val e = intercept[IllegalArgumentException](
+      Evals.bradleyTerry(games, "ma", "mb", "winner"))
+    assert(e.getMessage.contains("null model in mb"), e.getMessage)
+  }
+
   test("selfConsistency: majority with (count desc, answer asc) tie-break") {
     val rows = Seq(
       (1L, "b"), (1L, "b"), (1L, "a"),          // clear majority b

@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.graft.ListenerBusBridge
 import graft.operators.LexIndex
+import graft.tools.JobCounter
 
 /** Job and task budget of the lexical commit path on a small index: no
   * job as wide as Spark's parallel partition-discovery listing (which
@@ -13,20 +11,6 @@ import graft.operators.LexIndex
   */
 class LexCommitBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Tasks per job, from the jobs' stage ids and the finished tasks. */
-  private final class JobTasks extends SparkListener {
-    private val stagesOf = new ConcurrentHashMap[Int, (Seq[Int], String)]()
-    private val tasksOf = new ConcurrentHashMap[Int, Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      stagesOf.put(e.jobId, (e.stageIds, e.stageInfos.map(_.name).mkString("; ")))
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      tasksOf.merge(e.stageId, 1, Integer.sum)
-    def jobs: Seq[(Int, Int, String)] = stagesOf.asScala.toSeq.sortBy(_._1).map {
-      case (job, (stages, name)) =>
-        (job, stages.map(s => tasksOf.getOrDefault(s, 0).intValue).sum, name)
-    }
-  }
 
   /** Parquet data files under `dir`, at any depth. */
   private def dataFiles(dir: String): Set[String] = {
@@ -43,11 +27,7 @@ class LexCommitBudgetSpec extends SparkSpec {
     val corpus = (0L until 120L).map(doc).toDF("id", "text")
     val batch = (1000L until 1010L).map(doc).toDF("id", "text")
     val root = java.nio.file.Files.createTempDirectory("lexbudget").toString
-    val sc = spark.sparkContext
-    ListenerBusBridge.waitUntilEmpty(sc)
-    val listener = new JobTasks
-    sc.addSparkListener(listener)
-    val adopted = try {
+    val (adopted, jobs) = JobCounter.around(spark.sparkContext) {
       LexIndex.save(corpus, "text", "id", s"$root/idx")
       val before = dataFiles(s"$root/idx/postings")
       LexIndex.append(batch, "text", "id", s"$root/idx")
@@ -55,13 +35,11 @@ class LexCommitBudgetSpec extends SparkSpec {
       LexIndex.search(spark, s"$root/idx", "t7 t20 t33", k = 10).collect()
       LexIndex.delete(corpus.filter($"id" % 9 === 0), "id", s"$root/idx")
       LexIndex.compactDeletes(spark, s"$root/idx", s"$root/compacted")
-      ListenerBusBridge.waitUntilEmpty(sc)
       adopted
-    } finally sc.removeSparkListener(listener)
-    val jobs = listener.jobs
+    }
     assert(jobs.nonEmpty)
-    val wide = jobs.filter(_._2 >= 32)
-    assert(wide.isEmpty, s"jobs of 32+ tasks (job, tasks, stages): $wide")
+    val wide = jobs.filter(_.tasks >= 32)
+    assert(wide.isEmpty, s"jobs of 32+ tasks: $wide")
     assert(adopted.nonEmpty && adopted.size <= 4,
       s"append adopted ${adopted.size} data files")
   }
